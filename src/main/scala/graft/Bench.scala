@@ -84,11 +84,20 @@ object Bench {
     println(line)
     // machine-parse fallback (additive): the SAME line as a bare file,
     // so a log pipeline that decorates stdout can still parse the bench
-    if (only.isEmpty)
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_OUT.json"),
+    // — a failed write deletes the file rather than leave a stale run's
+    // line behind, and says so on stderr
+    if (only.isEmpty) {
+      val out = java.nio.file.Paths.get("BENCH_OUT.json")
+      try java.nio.file.Files.write(out,
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => () }
+      catch {
+        case e: java.io.IOException =>
+          val stale =
+            try { java.nio.file.Files.deleteIfExists(out); "removed any stale copy" }
+            catch { case d: java.io.IOException => s"stale copy NOT removed: $d" }
+          System.err.println(s"[bench] WARNING: could not write $out ($e); $stale")
+      }
+    }
     spark.stop()
   }
 }

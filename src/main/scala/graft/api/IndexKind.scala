@@ -79,7 +79,7 @@ trait IndexKind {
       insitu: Seq[String] = Seq.empty): DataFrame = {
     val all = (coveredFiles(spark, paths, None) ++ insitu).distinct
     require(all.nonEmpty, "no live files to search")
-    spark.read.parquet(all: _*).limit(0)
+    Layout.readPinned(spark, all).limit(0)
   }
 
   /** The shared search tail of every filter kind: probe the covering
@@ -97,9 +97,9 @@ trait IndexKind {
     val parts =
       (if (covered.isEmpty) Seq.empty
        else Seq(viaIndex().getOrElse(
-         refine(spark.read.parquet(covered: _*))))) ++
+         refine(Layout.readPinned(spark, covered))))) ++
       (if (insituFiles.isEmpty) Seq.empty
-       else Seq(refine(spark.read.parquet(insituFiles: _*))))
+       else Seq(refine(Layout.readPinned(spark, insituFiles))))
     if (parts.isEmpty) emptyLike(spark, paths, insituFiles)
     else parts.reduce(_ unionByName _)
   }
@@ -114,26 +114,21 @@ trait IndexKind {
     hits.size > Lake.BruteForceThreshold ||
       hits.size >= paths.map(metaRows(spark, _).size).sum
 
-  /** Resolve tagged `(idx, uid)` candidates to their row-group hit
-    * list: ONE job evaluates the candidate plan (its size is bounded by
-    * the row-group count), resolution itself is a driver map lookup
-    * against the cached metas.
+  /** Resolve probed `(idx, uid)` units ([[IndexKind.probe]]) to their
+    * row-group hit list: a driver map lookup against the cached metas.
     */
   protected def collectHits(spark: SparkSession, paths: Seq[String],
-      cands: DataFrame, live: Option[Set[String]]): Seq[(String, Long, Long, Long)] = {
+      units: Set[(Int, Long)], live: Option[Set[String]]): Seq[(String, Long, Long, Long)] = {
     val byIdx: Map[Int, Map[Long, (String, Long, Long)]] =
       paths.zipWithIndex.map { case (p, i) =>
         i -> metaRows(spark, p)
           .map(r => r._1 -> (r._2, r._3, r._4)).toMap
       }.toMap
-    cands.select("idx", "uid").distinct().collect()
-      .flatMap { r =>
-        byIdx(r.getInt(0)).get(r.getLong(1)).map {
-          case (f, rs, n) => (f, r.getLong(1), rs, n)
-        }
+    units.toSeq.sorted
+      .flatMap { case (i, u) =>
+        byIdx(i).get(u).map { case (f, rs, n) => (f, u, rs, n) }
       }
       .filter(h => live.forall(_.contains(h._1)))
-      .toSeq
   }
 }
 
@@ -173,32 +168,108 @@ object IndexKind {
   private val cache =
     new graft.core.LruMap[String, (Long, Seq[(Long, String, Long, Long)])](512)
 
-  private val schemaCache =
-    new graft.core.LruMap[String, (Long, org.apache.spark.sql.types.StructType)](512)
+  /** Key-column name (key vs key_hex) of one key index, from the keys
+    * dir's cached footer schema: without the cache every KeyKind search
+    * pays one eager footer-read job PER covering path at plan time,
+    * growing with compaction history.
+    */
+  private[graft] def keyColCached(spark: SparkSession, path: String): String =
+    KeyIndex.keyColOf(Layout.schemaOf(spark, s"$path/keys").fieldNames.toSeq)
 
-  // per-path key-column name (key vs key_hex), keyed by the keys dir
-  // signature — same rationale as schemaCache: without it every KeyKind
-  // search pays one eager footer-read job PER covering path at plan
-  // time, growing with compaction history
-  private val keyColCache = new graft.core.LruMap[String, (Long, String)](512)
+  /** The one candidate probe of every row-group-granular index. `rows`
+    * are the tagged, term-filtered index rows `(idx, uid[, term])`;
+    * with `need > 0`, `term` holds int term ordinals and a unit
+    * qualifies when it holds `need` distinct terms (the posting
+    * intersection), otherwise every unit of `rows` qualifies (dedup).
+    *
+    * ONE scan job with no shuffle; the driver intersects or dedups.
+    * The hit set is metadata-sized, so a groupBy/countDistinct or
+    * distinct() here only bought 3-4 AQE stage jobs over a few hundred
+    * rows. Term rows are postings, distinct per (term, unit) by
+    * construction, so the driver holds at most |probe terms| x
+    * |covered units| small tuples — the scale of the cached
+    * [[metaRows]]. Dedup rows (key occurrences, vector cells, log
+    * lines) can be data-scale: each partition dedups its own units
+    * before the collect.
+    */
+  private[graft] def probe(rows: DataFrame, need: Int = 0): Set[(Int, Long)] =
+    if (need > 0) unitTerms(rows).filter(_._2.size == need).keySet
+    else {
+      val qe = rows.select(col("idx").cast("int"), col("uid").cast("long"))
+        .queryExecution
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some("index probe")) {
+        qe.toRdd.mapPartitions { it =>
+          val units = scala.collection.mutable.HashSet.empty[(Int, Long)]
+          it.foreach(r => units += ((r.getInt(0), r.getLong(1))))
+          units.iterator
+        }.collect().toSet
+      }
+    }
 
-  private[graft] def keyColCached(spark: SparkSession, path: String): String = {
-    val dir = s"$path/keys"
-    val sig = graft.core.Fs.dirSignature(spark, dir)
-    keyColCache.get(dir) match {
-      case Some((m, c)) if m == sig => c
+  /** Distinct term ordinals per `(idx, uid)` unit of posting rows —
+    * the one-job collect under [[probe]] and [[postingTerms]].
+    */
+  private def unitTerms(rows: DataFrame): Map[(Int, Long), Set[Int]] =
+    rows.select(col("idx").cast("int"), col("uid").cast("long"),
+        col("term").cast("int"))
+      .collect()
+      .groupMap(r => (r.getInt(0), r.getLong(1)))(_.getInt(2))
+      .map { case (u, ts) => u -> ts.toSet }
+
+  /** 0-based ordinal of `c` in `terms` as the int `term` column (-1
+    * if absent; probe rows are filtered to `terms` first).
+    */
+  private def ordinal(c: org.apache.spark.sql.Column,
+      terms: Seq[String]): org.apache.spark.sql.Column =
+    (array_position(typedLit(terms), c) - 1).cast("int").as("term")
+
+  /** Ordinals of `terms` (distinct) held per unit of the covering
+    * indexes' bucketed `postings` — the one-job posting scan under
+    * [[postingUnits]] and the boolean-tree probe.
+    */
+  private[graft] def postingTerms(spark: SparkSession, paths: Seq[String],
+      terms: Seq[String]): Map[(Int, Long), Set[Int]] = {
+    val buckets = terms.map(graft.index.Bucketing.bucketOfString).distinct
+    unitTerms(readTagged(spark, paths, "postings")
+      .filter(col("bucket").isin(buckets: _*) && col("gram").isin(terms: _*))
+      .select(col("idx"), col("uid"), ordinal(col("gram"), terms)))
+  }
+
+  /** Units of the covering indexes `paths` whose postings hold EVERY
+    * one of `terms` — the posting intersection of the ngram, regex,
+    * token and SQL-rewrite probes, in one job.
+    */
+  private[graft] def postingUnits(spark: SparkSession, paths: Seq[String],
+      terms: Seq[String]): Set[(Int, Long)] = {
+    val ts = terms.distinct
+    postingTerms(spark, paths, ts).filter(_._2.size == ts.size).keySet
+  }
+
+  /** The standalone single-index search tail: candidate uids (None =
+    * the index cannot bound the query) → the uniform cost switch (too
+    * many hits, or every unit hit) → a selective read of the hit units
+    * (`uid` kept), else the covered-files scan (`uid` = -1). `refine`
+    * applies on both routes.
+    */
+  private[graft] def searchOne(spark: SparkSession, path: String,
+      cands: Option[Set[Long]], refine: DataFrame => DataFrame): DataFrame = {
+    val meta = metaRows(spark, path)
+    val covered = meta.map(_._2).distinct.sorted
+    cands match {
+      case Some(us) if us.size <= Lake.BruteForceThreshold && us.size < meta.size =>
+        val hits = meta.filter(r => us.contains(r._1))
+          .map { case (u, f, rs, n) => (f, u, rs, n) }
+        refine(Layout.readGroups(spark, hits, covered))
       case _ =>
-        val c = graft.index.KeyIndex.keyColOf(
-          spark.read.parquet(dir).columns.toSeq)
-        keyColCache.put(dir, (sig, c))
-        c
+        refine(Layout.readPinned(spark, covered)).withColumn("uid", lit(-1L))
     }
   }
 
   /** Union scan of the same sub-table across several index dirs, each
     * row tagged with its index ordinal (`idx`). Every read pins the
-    * sub-table's schema (driver-cached from the first index, keyed by
-    * mtime — all indexes of a kind share it by construction): a bare
+    * sub-table's schema ([[Layout.schemaOf]] of the first index — all
+    * indexes of a kind share it by construction): a bare
     * `spark.read.parquet` resolves its schema EAGERLY with one listing/
     * schema job per call, which made facade searches pay one job PER
     * COVERING INDEX at plan time. With the schema pinned, planning runs
@@ -210,15 +281,7 @@ object IndexKind {
     */
   private[graft] def readTagged(spark: SparkSession, paths: Seq[String],
       sub: String): DataFrame = {
-    val first = s"${paths.head}/$sub"
-    val mtime = graft.core.Fs.dirSignature(spark, first)
-    val schema = schemaCache.get(first) match {
-      case Some((m, s)) if m == mtime => s
-      case _ =>
-        val s = spark.read.parquet(first).schema
-        schemaCache.put(first, (mtime, s))
-        s
-    }
+    val schema = Layout.schemaOf(spark, s"${paths.head}/$sub")
     paths.zipWithIndex.map { case (p, i) =>
       spark.read.schema(schema).parquet(s"$p/$sub")
         .withColumn("idx", lit(i))
@@ -270,16 +333,10 @@ object NgramKind extends IndexKind {
         if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
         else Seq(q)
       }
-      val qbuckets = qgrams.map(NgramIndex.bucketOfString).distinct
       // every covering index probed in ONE multi-path scan (a per-index
       // read+union would pay a listing/schema job per index)
-      val post = IndexKind.readTagged(spark, paths, "postings")
-        .filter(col("bucket").isin(qbuckets: _*) && col("gram").isin(qgrams: _*))
-        .select(col("idx"), col("gram"), col("uid"))
-      val cands = post.groupBy(col("idx"), col("uid"))
-        .agg(countDistinct(col("gram")).as("ng"))
-        .filter(col("ng") === qgrams.size)
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths,
+        IndexKind.postingUnits(spark, paths, qgrams), live)
       // ONE global cost switch over the whole lake's hit count
       if (bruteBeatsIndex(spark, paths, hits)) None
       else {
@@ -341,15 +398,8 @@ object NgramRegexKind extends IndexKind {
         if (cpg.nonEmpty) cpg else Seq(l)
       }.distinct
       val probeGrams = graft.text.QueryShaping.viableGrams(qgrams)
-      val qbuckets = probeGrams.map(NgramIndex.bucketOfString).distinct
-      val post = IndexKind.readTagged(spark, paths, "postings")
-        .filter(col("bucket").isin(qbuckets: _*) &&
-          col("gram").isin(probeGrams: _*))
-        .select(col("idx"), col("gram"), col("uid"))
-      val cands = post.groupBy(col("idx"), col("uid"))
-        .agg(countDistinct(col("gram")).as("ng"))
-        .filter(col("ng") === probeGrams.size)
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths,
+        IndexKind.postingUnits(spark, paths, probeGrams), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(
         Layout.readGroups(spark, hits, covered).drop("uid")
@@ -389,50 +439,15 @@ object BoolNgramKind extends IndexKind {
     def refine(d: DataFrame): DataFrame =
       d.filter(BoolSearch.predicate(column, tree))
 
-    def viaIndex(): Option[DataFrame] = {
-      import spark.implicits._
-      // ONE batched probe for every distinct term across every
-      // covering index (gram→term tagged postings; N terms never pay
-      // N Spark jobs)
-      val termGrams: Map[String, Seq[String]] = BoolSearch.termsOf(tree)
-        .toSeq.flatMap(t => BoolSearch.gramsOf(t).map(t -> _)).toMap
-      val perTerm: Map[String, Set[(Int, Long)]] =
-        if (termGrams.isEmpty) Map.empty
-        else {
-          val pairs = termGrams.toSeq.flatMap { case (t, gs) =>
-            gs.map(g => (g, t))
-          }
-          val allGrams = pairs.map(_._1).distinct
-          val qbuckets = allGrams.map(NgramIndex.bucketOfString).distinct
-          IndexKind.readTagged(spark, paths, "postings")
-            .filter(col("bucket").isin(qbuckets: _*) &&
-              col("gram").isin(allGrams: _*))
-            .join(broadcast(pairs.toDF("gram", "term")), Seq("gram"))
-            .groupBy(col("term"), col("idx"), col("uid"))
-            .agg(countDistinct(col("gram")).as("ng"))
-            .collect()
-            .groupBy(_.getString(0))
-            .map { case (t, rows) =>
-              t -> rows
-                .filter(_.getLong(3) == termGrams(t).size.toLong)
-                .map(r => (r.getInt(1), r.getLong(2))).toSet
-            }
-        }
-      def termCands(t: String): Option[Set[(Int, Long)]] = {
-        val q = graft.text.Text.sparkLower(t)
-        if (q.isEmpty) None // contains("") = every row: no bound
-        else Some(perTerm.getOrElse(q, Set.empty))
-      }
-      BoolSearch.cands(tree, termCands) match {
+    def viaIndex(): Option[DataFrame] =
+      BoolSearch.candUnits(spark, paths, tree) match {
         case None => None // unbounded tree: brute covered scan
         case Some(set) =>
-          val hits = collectHits(spark, paths,
-            set.toSeq.toDF("idx", "uid"), live)
+          val hits = collectHits(spark, paths, set, live)
           if (bruteBeatsIndex(spark, paths, hits)) None
           else Some(refine(
             Layout.readGroups(spark, hits, covered).drop("uid")))
       }
-    }
 
     searchParts(spark, paths, insituFiles, covered, () => viaIndex(),
       refine)
@@ -534,7 +549,7 @@ object KeyKind extends IndexKind {
       else Some(IndexKind.readTagged(spark, paths, "keys"))
     val hexMode = keyCols.contains(KeyIndex.HexKeyCol) ||
       (paths.isEmpty && insituFiles.nonEmpty &&
-        spark.read.parquet(insituFiles.head).schema.fields.exists(f =>
+        Layout.schemaOf(spark, insituFiles.head).fields.exists(f =>
           f.name == column &&
             f.dataType == org.apache.spark.sql.types.BinaryType))
     val kc = if (hexMode) KeyIndex.HexKeyCol else "key"
@@ -557,7 +572,7 @@ object KeyKind extends IndexKind {
           case Some(hi) => keys.filter(col("key") >= key && col("key") < hi)
           case None     => keys.filter(col("key") >= key)
         }
-      val hits = collectHits(spark, paths, ranged, live)
+      val hits = collectHits(spark, paths, IndexKind.probe(ranged), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }

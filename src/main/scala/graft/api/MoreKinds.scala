@@ -54,7 +54,7 @@ object LogCloudKind extends IndexKind {
       if (!LogCloudIndex.isVariableQuery(query)) return None
       val cands = LogCloudIndex.varCandidatesMulti(spark, paths, query)
         .select(col("idx"), col("line_id").as("uid"))
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }
@@ -96,15 +96,8 @@ object TokenKind extends IndexKind {
 
     def viaIndex(): Option[DataFrame] = {
       if (qtoks.isEmpty) return None
-      val qg = TokenIndex.queryGrams(qtoks)
-      val qbuckets = qg.map(TokenIndex.bucketOfString).distinct
-      val post = IndexKind.readTagged(spark, paths, "postings")
-        .filter(col("bucket").isin(qbuckets: _*) && col("gram").isin(qg: _*))
-        .select(col("idx"), col("gram"), col("uid"))
-      val cands = post.groupBy(col("idx"), col("uid"))
-        .agg(countDistinct(col("gram")).as("ng"))
-        .filter(col("ng") === qg.size)
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths,
+        IndexKind.postingUnits(spark, paths, TokenIndex.queryGrams(qtoks)), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }
@@ -153,7 +146,7 @@ object ZoneMapKind extends IndexKind {
       val cands = zones
         .filter(col("hi") >= ZoneMapIndex.boundExpr(dt, lo) &&
           col("lo") <= ZoneMapIndex.boundExpr(dt, hi)) // overlap test
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }
@@ -190,7 +183,7 @@ object BloomKind extends IndexKind {
       else Some(IndexKind.readTagged(spark, paths, "blooms"))
     val hexMode = bloomsAll.exists(graft.index.BloomIndex.isHexForm) ||
       (paths.isEmpty && insituFiles.nonEmpty &&
-        spark.read.parquet(insituFiles.head).schema.fields.exists(f =>
+        Layout.schemaOf(spark, insituFiles.head).fields.exists(f =>
           f.name == column &&
             f.dataType == org.apache.spark.sql.types.BinaryType))
     val q = if (hexMode) query.toUpperCase else query
@@ -202,8 +195,7 @@ object BloomKind extends IndexKind {
     def viaIndex(): Option[DataFrame] = {
       val cands = bloomsAll.get
         .filter(graft.index.BloomIndex.probe(q))
-        .select(col("idx"), col("uid"))
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }
@@ -248,20 +240,8 @@ object FuzzyKind extends IndexKind {
       d.filter(FuzzyIndex.refinePredicate(column, qtoks))
 
     def viaIndex(): Option[DataFrame] = {
-      import spark.implicits._
-      val probes = qtoks.zipWithIndex.flatMap { case (q, i) =>
-        FuzzyIndex.variantsOf(q).map(v => (v, i))
-      }.distinct
-      val qbuckets = probes
-        .map(p => graft.index.NgramIndex.bucketOfString(p._1)).distinct
-      val cands = IndexKind.readTagged(spark, paths, "postings")
-        .filter(col("bucket").isin(qbuckets: _*) &&
-          col("variant").isin(probes.map(_._1).distinct: _*))
-        .join(broadcast(probes.toDF("variant", "tok")), Seq("variant"))
-        .groupBy(col("idx"), col("uid"))
-        .agg(countDistinct(col("tok")).as("nt"))
-        .filter(col("nt") === qtoks.size)
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths,
+        FuzzyIndex.candUnits(spark, paths, qtoks), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }
@@ -305,8 +285,7 @@ object MinHashKind extends IndexKind {
         .filter(keys.map { case (b, kk) =>
           col("band") === b && col("bkey") === kk
         }.reduce(_ || _))
-        .select(col("idx"), col("uid"))
-      val hits = collectHits(spark, paths, cands, live)
+      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
       if (bruteBeatsIndex(spark, paths, hits)) None
       else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
     }
@@ -446,13 +425,13 @@ case class VectorKind(idCol: String, nprobe: Int = Int.MaxValue,
               .filter(col("__rnk") <= refine)
           }
         val cands = pre.select(col("idx"), col("vec_id").as("uid"))
-        val hits = collectHits(spark, paths, cands, live)
+        val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
         Some(Layout.readGroups(spark, hits, covered).drop("uid"))
       }
 
     val parts = indexed.toSeq ++
       (if (insituFiles.isEmpty) Seq.empty
-       else Seq(spark.read.parquet(insituFiles: _*)))
+       else Seq(Layout.readPinned(spark, insituFiles)))
     // empty live set: run the zero-row frame through the SAME rerank
     // projection so the result schema matches the normal path
     val base =
@@ -563,7 +542,7 @@ case class VamanaKind(idCol: String, l: Int = Int.MaxValue,
 
     val parts = indexed.toSeq ++
       (if (insituFiles.isEmpty) Seq.empty
-       else Seq(spark.read.parquet(insituFiles: _*)))
+       else Seq(Layout.readPinned(spark, insituFiles)))
     val base =
       if (parts.isEmpty) emptyLike(spark, paths)
       else parts.reduce(_ unionByName _)

@@ -288,6 +288,36 @@ object Layout {
       meta.select("file_path").limit(1).collect().map(_.getString(0)).toSeq)
   }
 
+  // footer schemas per path, stamped with the path's content signature
+  // (LRU-bounded: lake and index paths churn under compaction)
+  private val footers =
+    new LruMap[String, (Long, org.apache.spark.sql.types.StructType)](1024)
+
+  /** The schema `spark.read.parquet(path)` infers for a file or table
+    * dir — non-merging inference, i.e. its first file's footer — cached
+    * per [[Fs.dirSignature]]. Only a miss pays the inference job; a
+    * rewritten file or dir changes its signature, misses, and is
+    * re-inferred, so a stale schema is never served.
+    */
+  def schemaOf(spark: SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
+    val sig = Fs.dirSignature(spark, path)
+    footers.get(path) match {
+      case Some((s, st)) if s == sig => st
+      case _ =>
+        val st = spark.read.parquet(path).schema
+        footers.put(path, (sig, st))
+        st
+    }
+  }
+
+  /** `spark.read.parquet(paths)` with the first path's cached schema
+    * pinned ([[schemaOf]]): what Spark's non-merging inference would
+    * pick, without the per-read inference job.
+    */
+  def readPinned(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(schemaOf(spark, paths.head)).parquet(paths: _*)
+
   /** Physical fetch of an explicit row-group hit list
     * `(file_path, uid, row_start, num_rows)` — the shared tail of every
     * index search: read only the files containing hits, keep only rows
@@ -300,10 +330,10 @@ object Layout {
     val hitFiles = hitMeta.map(_._1).distinct.sorted
     if (hitFiles.isEmpty) {
       // empty hit set: preserve the lake schema (+uid) with zero rows
-      return spark.read.parquet(schemaFiles: _*).limit(0)
+      return readPinned(spark, schemaFiles).limit(0)
         .withColumn("uid", lit(0L))
     }
-    val data = spark.read.parquet(hitFiles: _*)
+    val data = readPinned(spark, hitFiles)
       .withColumn("__file", canonPath(col("_metadata.file_path")))
       .withColumn("__pos", col("_metadata.row_index"))
     // literal hit-range PREFILTER before the uid join (hitMeta is

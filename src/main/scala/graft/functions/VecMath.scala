@@ -410,11 +410,33 @@ case class NbScorePack(first: Expression, second: Expression,
     else if (second.eval() == null || third.eval() == null)
       TypeCheckResult.TypeCheckFailure(
         "nb_score_pack model map and class count must be non-null")
-    else TypeCheckResult.TypeCheckSuccess
+    else if (nClasses < 0)
+      TypeCheckResult.TypeCheckFailure(
+        s"nb_score_pack class count must be >= 0, got $nClasses")
+    else badValue match {
+      // the kernel reads nClasses counts from every value array: a
+      // null or shorter one must fail here, not mid-task
+      case Some(why) => TypeCheckResult.TypeCheckFailure(
+        s"nb_score_pack model value for $why")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
   }
 
   @transient private lazy val nClasses: Int =
     third.eval().asInstanceOf[Int]
+
+  // the first model entry the kernel cannot read, checked once per
+  // instance — analysis re-runs the type check
+  @transient private lazy val badValue: Option[String] = {
+    val md = second.eval().asInstanceOf[MapData]
+    val (ks, vs) = (md.keyArray(), md.valueArray())
+    (0 until md.numElements()).collectFirst {
+      case i if vs.isNullAt(i) => s"'${ks.getUTF8String(i)}' is null"
+      case i if vs.getArray(i).numElements() < nClasses =>
+        s"'${ks.getUTF8String(i)}' has ${vs.getArray(i).numElements()} " +
+          s"counts, fewer than the class count $nClasses"
+    }
+  }
 
   // the broadcast model, hashed once per expression instance
   @transient private lazy val model: java.util.HashMap[UTF8String, Array[Long]] = {

@@ -1,6 +1,5 @@
 package graft.index
 
-import graft.core.Layout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,68 +100,38 @@ object BoolSearch {
         else Seq(q))
     }
 
-  /** Search one gram index with a boolean tree: ONE batched probe job
-    * resolves every distinct term's candidate set (gram→term tagged
-    * postings, per-(term, uid) gram-count intersection — N terms never
-    * pay N Spark jobs), then set algebra, ONE selective read, combined
-    * refine. Returns matching lake rows (all columns + uid).
+  /** Candidate units `(idx, uid)` of the tree over the covering ngram
+    * indexes `paths` (None = unbounded): ONE probe job for every
+    * distinct gram of every term ([[graft.api.IndexKind.postingTerms]] —
+    * N terms never pay N Spark jobs), a unit holds a term when it holds
+    * all of the term's grams, then the set algebra.
     */
-  def search(spark: SparkSession, path: String, column: String,
-      query: Bq): DataFrame = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta")
-    // ONE metadata collect serves both the covered-file list and the
-    // row-group total the brute-vs-index decision needs — these were
-    // two separate jobs on the same metadata-scale frame per search
-    lazy val metaFilesRaw: Array[String] =
-      meta.select("file_path").collect().map(_.getString(0))
-    lazy val coveredFiles: Seq[String] = metaFilesRaw.distinct.toSeq
-    lazy val metaRows: Long = metaFilesRaw.length.toLong
-    def coveredScan(): DataFrame =
-      spark.read.parquet(coveredFiles: _*)
-        .filter(predicate(column, query))
-        .withColumn("uid", lit(-1L))
-
+  private[graft] def candUnits(spark: SparkSession, paths: Seq[String],
+      query: Bq): Option[Set[(Int, Long)]] = {
+    import graft.api.IndexKind
     val termGrams: Map[String, Seq[String]] =
       termsOf(query).toSeq.flatMap(t => gramsOf(t).map(t -> _)).toMap
-    val perTerm: Map[String, Set[Long]] =
-      if (termGrams.isEmpty) Map.empty
-      else {
-        val pairs = termGrams.toSeq.flatMap { case (t, gs) =>
-          gs.map(g => (g, t))
-        }
-        val allGrams = pairs.map(_._1).distinct
-        val qbuckets = allGrams.map(NgramIndex.bucketOfString).distinct
-        spark.read.parquet(s"$path/postings")
-          .filter(col("bucket").isin(qbuckets: _*) &&
-            col("gram").isin(allGrams: _*))
-          .join(broadcast(pairs.toDF("gram", "term")), Seq("gram"))
-          .groupBy(col("term"), col("uid"))
-          .agg(countDistinct(col("gram")).as("ng"))
-          .collect()
-          .groupBy(_.getString(0))
-          .map { case (t, rows) =>
-            t -> rows.filter(_.getLong(2) == termGrams(t).size.toLong)
-              .map(_.getLong(1)).toSet
-          }
-      }
-    def termCands(t: String): Option[Set[Long]] = {
+    val allGrams = termGrams.values.flatten.toSeq.distinct
+    val held: Map[(Int, Long), Set[Int]] =
+      if (allGrams.isEmpty) Map.empty
+      else IndexKind.postingTerms(spark, paths, allGrams)
+    cands(query, { (t: String) =>
       val q = graft.text.Text.sparkLower(t)
       if (q.isEmpty) None // contains("") = every row: no bound
-      else Some(perTerm.getOrElse(q, Set.empty))
-    }
-
-    cands(query, termCands) match {
-      case None => coveredScan()
-      case Some(set) =>
-        val hitList = set.toSeq.sorted
-        if (hitList.size > graft.core.Lake.BruteForceThreshold ||
-            hitList.size >= metaRows) coveredScan()
-        else if (hitList.isEmpty)
-          spark.read.parquet(coveredFiles: _*)
-            .withColumn("uid", lit(-1L)).filter(lit(false))
-        else Layout.readHits(spark, meta, hitList.toDF("uid"))
-          .filter(predicate(column, query))
-    }
+      else Some(termGrams.get(q).fold(Set.empty[(Int, Long)]) { gs =>
+        val need = gs.map(allGrams.indexOf)
+        held.filter(h => need.forall(h._2)).keySet
+      })
+    })
   }
+
+  /** Search one gram index with a boolean tree: the one-job term probe
+    * ([[candUnits]]), set algebra, ONE selective read, combined refine.
+    * Returns matching lake rows (all columns + uid).
+    */
+  def search(spark: SparkSession, path: String, column: String,
+      query: Bq): DataFrame =
+    graft.api.IndexKind.searchOne(spark, path,
+      candUnits(spark, Seq(path), query).map(_.map(_._2)),
+      _.filter(predicate(column, query)))
 }

@@ -116,51 +116,43 @@ object FuzzyIndex {
         t => levenshtein(t, lit(q)) <= MaxDist))
       .reduce(_ && _)
 
+  /** Candidate units `(idx, uid)` over the covering fuzzy indexes
+    * `paths`: units holding, for EVERY query token, some variant of
+    * its deletion neighborhood. A variant can serve several query
+    * tokens, so each posting row explodes to the token ordinals it
+    * witnesses (a literal map lookup — no join, no shuffle) and the
+    * one-job probe counts distinct tokens per unit.
+    */
+  private[graft] def candUnits(spark: SparkSession, paths: Seq[String],
+      qtoks: Seq[String]): Set[(Int, Long)] = {
+    val toksOf: Map[String, Seq[Int]] = qtoks.zipWithIndex
+      .flatMap { case (q, i) => variantsOf(q).map(_ -> i) }
+      .groupMap(_._1)(_._2)
+    val variants = toksOf.keys.toSeq.sorted
+    graft.api.IndexKind.probe(
+      graft.api.IndexKind.readTagged(spark, paths, "postings")
+        .filter(col("bucket").isin(variants.map(NgramIndex.bucketOfString).distinct: _*) &&
+          col("variant").isin(variants: _*))
+        .select(col("idx"), col("uid"),
+          explode(element_at(typedLit(toksOf), col("variant"))).as("term")),
+      qtoks.size)
+  }
+
   /** Search one index: probe each query token's deletion neighborhood,
     * intersect per-token candidate row groups (a matching row holds a
     * near-token for every query token), selective read, levenshtein
     * refine. Returns matching lake rows (all columns + uid); no
-    * K-truncation before refine.
+    * K-truncation before refine. A token-less query defines no fuzzy
+    * predicate: the defined empty result, schema preserved.
     */
   def search(spark: SparkSession, path: String, column: String,
       query: String): DataFrame = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta")
-    def coveredFiles: Seq[String] = meta.select("file_path").distinct()
-      .collect().map(_.getString(0)).toSeq
     val qtoks = Text.RegexTokenizer.tokenizeQuery(query)
-    if (qtoks.isEmpty) {
-      // no token ⇒ no fuzzy predicate: defined empty result (schema
-      // preserved), mirroring the facade kinds' empty-query convention
-      return spark.read.parquet(coveredFiles: _*)
-        .withColumn("uid", lit(-1L)).filter(lit(false))
-    }
-    // (variant, tokIdx) probe table — a variant can serve several query
-    // tokens; the broadcast join tags postings rows with which token
-    // they witness, and the countDistinct intersection requires every
-    // token witnessed in the same row group
-    val probes = qtoks.zipWithIndex.flatMap { case (q, i) =>
-      variantsOf(q).map(v => (v, i))
-    }.distinct
-    val qbuckets = probes.map(p => NgramIndex.bucketOfString(p._1)).distinct
-    val post = spark.read.parquet(s"$path/postings")
-      .filter(col("bucket").isin(qbuckets: _*) &&
-        col("variant").isin(probes.map(_._1).distinct: _*))
-    val cands = post
-      .join(broadcast(probes.toDF("variant", "tok")), Seq("variant"))
-      .groupBy("uid").agg(countDistinct(col("tok")).as("nt"))
-      .filter(col("nt") === qtoks.size)
-      .select("uid").collect().map(_.getLong(0)).toSeq
-    // cost switch, same thresholds as the gram index: many hits (or
-    // zero pruning value) ⇒ scan-and-refine beats selective fetches
-    if (cands.size > graft.core.Lake.BruteForceThreshold ||
-        cands.size >= meta.count()) {
-      return spark.read.parquet(coveredFiles: _*)
-        .filter(refinePredicate(column, qtoks))
-        .withColumn("uid", lit(-1L))
-    }
-    Layout.readHits(spark, meta, cands.toDF("uid"))
-      .filter(refinePredicate(column, qtoks))
+    val cands =
+      if (qtoks.isEmpty) Set.empty[Long]
+      else candUnits(spark, Seq(path), qtoks).map(_._2)
+    graft.api.IndexKind.searchOne(spark, path, Some(cands),
+      d => if (qtoks.isEmpty) d else d.filter(refinePredicate(column, qtoks)))
   }
 
   /** Merge two indexes (compaction): union with the second side's uids

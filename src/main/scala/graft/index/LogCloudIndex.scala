@@ -301,10 +301,12 @@ object LogCloudIndex {
           .select("idx", "value")
         typedVars.join(candVals, Seq("idx", "value"), "left_semi")
       } else typedVars
+    // not deduped: every consumer is a semi-join or the facade's
+    // dedupping probe (IndexKind.probe), so a distinct() here would
+    // only add a shuffle
     dictHits.select("idx", "line_id")
       .union(outlierHits.select("idx", "line_id"))
       .union(prune(varSource).select("idx", "line_id"))
-      .distinct()
   }
 
   /** Single-index candidates (the multi-path plan with one path). */

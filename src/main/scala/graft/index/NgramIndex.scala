@@ -83,14 +83,8 @@ object NgramIndex {
   def search(spark: SparkSession, path: String, column: String,
       query: String): DataFrame = {
     val q = graft.text.Text.sparkLower(query)
-    val meta = spark.read.parquet(s"$path/meta")
-    if (q.isEmpty) {
-      // contains("") is every row: no gram to probe, scan covered files
-      val files = meta.select("file_path").distinct()
-        .collect().map(_.getString(0)).toSeq
-      return spark.read.parquet(files: _*)
-        .withColumn("uid", lit(-1L))
-    }
+    // contains("") is every row: no gram to probe, scan covered files
+    if (q.isEmpty) return graft.api.IndexKind.searchOne(spark, path, None, d => d)
     // cap probe width on long queries (candidate superset stays valid;
     // refine restores exactness) — reference: token_viable_limit,
     // src/lava/substring/search.rs:512-524. Queries shorter than the
@@ -102,33 +96,12 @@ object NgramIndex {
       if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
       else Seq(q)
     }
-    val qbuckets = qgrams.map(bucketOfString).distinct
-    val post = spark.read.parquet(s"$path/postings")
-      // bucket predicate prunes partitions; gram predicate prunes row
-      // groups inside them via parquet min/max stats
-      .filter(col("bucket").isin(qbuckets: _*) && col("gram").isin(qgrams: _*))
-    import spark.implicits._
     // candidate uids are row-group ordinals — metadata-sized by
-    // definition — so one collect both feeds the cost switch and
-    // replaces a session-cache entry that would otherwise leak
-    val cands = post.groupBy("uid")
-      .agg(countDistinct(col("gram")).as("ng"))
-      .filter(col("ng") === qgrams.size)
-      .select("uid").collect().map(_.getLong(0)).toSeq
-    // cost switch: past the hit threshold — or when EVERY row group is
-    // hit (zero pruning value) — a full scan beats selective row-group
-    // fetches (reference: brute_force_threshold=1000,
-    // backends/utils.py:221-225)
-    if (cands.size > graft.core.Lake.BruteForceThreshold ||
-        cands.size >= meta.count()) {
-      val files = meta.select("file_path").distinct()
-        .collect().map(_.getString(0)).toSeq
-      return spark.read.parquet(files: _*)
-        .filter(lower(col(column)).contains(q))
-        .withColumn("uid", lit(-1L))
-    }
-    Layout.readHits(spark, meta, cands.toDF("uid"))
-      .filter(lower(col(column)).contains(q))
+    // definition — so one probe job feeds the cost switch (reference:
+    // brute_force_threshold=1000, backends/utils.py:221-225)
+    graft.api.IndexKind.searchOne(spark, path,
+      Some(graft.api.IndexKind.postingUnits(spark, Seq(path), qgrams).map(_._2)),
+      _.filter(lower(col(column)).contains(q)))
   }
 
   /** Regex search against the same postings: probe the index for the
@@ -149,40 +122,22 @@ object NgramIndex {
     */
   def searchRegex(spark: SparkSession, path: String, column: String,
       pattern: String): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta")
-    def coveredScan(): DataFrame = {
-      val files = meta.select("file_path").distinct()
-        .collect().map(_.getString(0)).toSeq
-      spark.read.parquet(files: _*)
-        .filter(lower(col(column)).rlike(pattern))
-        .withColumn("uid", lit(-1L))
-    }
     val lits = graft.text.QueryShaping.requiredLiterals(pattern)
       .map(graft.text.Text.sparkLower).filter(_.nonEmpty)
-    if (lits.isEmpty) return coveredScan()
     // every literal's grams must ALL be present in a candidate row
     // group (a matching row contains every literal, so its group's gram
     // set is a superset of every literal's grams); literals shorter
     // than the gram width probe their exact short gram — one flat
     // distinct gram set carries the conjunction
-    val qgrams = lits.flatMap { l =>
-      val cpg = graft.text.Text.cpGrams(l, N)
-      if (cpg.nonEmpty) cpg else Seq(l)
-    }.distinct
-    val probeGrams = graft.text.QueryShaping.viableGrams(qgrams)
-    val qbuckets = probeGrams.map(bucketOfString).distinct
-    val post = spark.read.parquet(s"$path/postings")
-      .filter(col("bucket").isin(qbuckets: _*) &&
-        col("gram").isin(probeGrams: _*))
-    import spark.implicits._
-    val cands = post.groupBy("uid")
-      .agg(countDistinct(col("gram")).as("ng"))
-      .filter(col("ng") === probeGrams.size)
-      .select("uid").collect().map(_.getLong(0)).toSeq
-    if (cands.size > graft.core.Lake.BruteForceThreshold ||
-        cands.size >= meta.count()) return coveredScan()
-    Layout.readHits(spark, meta, cands.toDF("uid"))
-      .filter(lower(col(column)).rlike(pattern))
+    val cands =
+      if (lits.isEmpty) None
+      else Some(graft.api.IndexKind.postingUnits(spark, Seq(path),
+        graft.text.QueryShaping.viableGrams(lits.flatMap { l =>
+          val cpg = graft.text.Text.cpGrams(l, N)
+          if (cpg.nonEmpty) cpg else Seq(l)
+        }.distinct)).map(_._2))
+    graft.api.IndexKind.searchOne(spark, path, cands,
+      _.filter(lower(col(column)).rlike(pattern)))
   }
 
   /** Merge two indexes into one (compaction): second index's uids are

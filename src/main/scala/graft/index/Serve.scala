@@ -279,10 +279,10 @@ object Serve {
           .orElse(hits.values.flatten.headOption) match {
           case Some(r) => r.schema
           case None =>
-            // nothing materialized yet: lake schema (+uid) from a
-            // covered file footer — a driver read, not a Spark job
+            // nothing materialized yet: lake schema (+uid) from the
+            // first covered file's cached footer
             val f = metaByUid.values.map(_._2).toSeq.distinct.sorted
-            spark.read.parquet(f.head).schema.add("uid",
+            Layout.schemaOf(spark, f.head).add("uid",
               org.apache.spark.sql.types.LongType)
         }
         rowSchemaCache.put((path, ver), s)
@@ -426,7 +426,7 @@ object Serve {
     if (missing.isEmpty) hits
     else {
       val buckets = missing.map(bucketOf).distinct
-      val got = spark.read.parquet(s"$path/postings")
+      val got = Layout.readPinned(spark, Seq(s"$path/postings"))
         .filter(col("bucket").isin(buckets: _*) &&
           col(termCol).isin(missing: _*))
         .select(termCol, valueCols: _*).collect()
@@ -533,7 +533,7 @@ object Serve {
     keysCache.get((path, ver)) match {
       case Some(t) => Some(t)
       case None =>
-        val df = spark.read.parquet(s"$path/keys")
+        val df = Layout.readPinned(spark, Seq(s"$path/keys"))
         val kc = KeyIndex.keyColOf(df.columns.toSeq)
         // non-string key columns (a key index over a numeric id) are
         // not servable by the string-sorted warm table — fall back to

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.core.{Lake, Layout}
+import graft.core.Layout
 import graft.text.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -75,40 +75,21 @@ object TokenIndex {
   def search(spark: SparkSession, path: String, column: String,
       query: String): DataFrame = {
     val qtoks = tokensOf(query)
-    val meta = spark.read.parquet(s"$path/meta")
     val qnorm = " " + qtoks.mkString(" ") + " "
-    def refine(df: DataFrame) = df.filter(normalForm(col(column)).contains(qnorm))
-    def brute(): DataFrame = {
-      val files = meta.select("file_path").distinct()
-        .collect().map(_.getString(0)).toSeq
-      refine(spark.read.parquet(files: _*)).withColumn("uid", lit(-1L))
-    }
     // a token-less query ("!!!") is the EMPTY token sequence — a
     // sub-sequence of every NON-NULL row, so every covered non-null
     // row matches (the BwtDriver/TokenFmIndex convention; refining
     // with the two-space normal form would instead keep only
     // token-less ROWS). NULLs excluded like every contains-based path
-    if (qtoks.isEmpty) {
-      val files = meta.select("file_path").distinct()
-        .collect().map(_.getString(0)).toSeq
-      return spark.read.parquet(files: _*)
-        .filter(col(column).isNotNull).withColumn("uid", lit(-1L))
-    }
-    val qg = queryGrams(qtoks)
-    val qbuckets = qg.map(bucketOfString).distinct
-    val post = spark.read.parquet(s"$path/postings")
-      .filter(col("bucket").isin(qbuckets: _*) && col("gram").isin(qg: _*))
-    val cands = post.groupBy(col("uid"))
-      .agg(countDistinct(col("gram")).as("nb"))
-      .filter(col("nb") === qg.size)
-      .select("uid").collect().map(_.getLong(0)).toSeq
+    if (qtoks.isEmpty)
+      return graft.api.IndexKind.searchOne(spark, path, None,
+        _.filter(col(column).isNotNull))
     // same global cost switch as every other kind (reference:
-    // brute_force_threshold, backends/utils.py:221-225); all-groups-hit
-    // means zero pruning value → plain scan wins
-    if (cands.size > Lake.BruteForceThreshold ||
-        cands.size >= meta.count()) return brute()
-    import spark.implicits._
-    refine(Layout.readHits(spark, meta, cands.toDF("uid")))
+    // brute_force_threshold, backends/utils.py:221-225)
+    graft.api.IndexKind.searchOne(spark, path,
+      Some(graft.api.IndexKind.postingUnits(spark, Seq(path),
+        queryGrams(qtoks)).map(_._2)),
+      _.filter(normalForm(col(column)).contains(qnorm)))
   }
 
   /** Merge two token indexes (reference merge mode 1,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, countDistinct}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
 /** Transparent index acceleration for PLAIN Spark reads — the SURVEY
@@ -1410,12 +1410,9 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
     * equality filter → row-group pruning inside the key table itself).
     */
   private def keyProbe(paths: Seq[String], keys: Seq[String]): Set[String] = {
-    val cands = graft.api.IndexKind.readTagged(spark, paths, "keys")
-      .filter(col("key").isin(keys: _*))
-      .select("idx", "uid").distinct().collect()
-      .map(r => (r.getInt(r.fieldIndex("idx")), r.getLong(r.fieldIndex("uid"))))
-      .toSet
-    filesOf(paths, cands)
+    filesOf(paths, graft.api.IndexKind.probe(
+      graft.api.IndexKind.readTagged(spark, paths, "keys")
+        .filter(col("key").isin(keys: _*))))
   }
 
   /** Files whose sorted key table has any key in [prefix, nextPrefix)
@@ -1428,10 +1425,7 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
       case Some(hi) => ranged.filter(col("key") < hi)
       case None     => ranged
     }
-    val cands = bounded.select("idx", "uid").distinct().collect()
-      .map(r => (r.getInt(r.fieldIndex("idx")), r.getLong(r.fieldIndex("uid"))))
-      .toSet
-    filesOf(paths, cands)
+    filesOf(paths, graft.api.IndexKind.probe(bounded))
   }
 
   /** Files whose bloom filter may contain any of `vals` (bitset probe
@@ -1439,12 +1433,9 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
     * sound, the refine filter stays on top).
     */
   private def bloomProbe(paths: Seq[String], vals: Seq[String]): Set[String] = {
-    val cands = graft.api.IndexKind.readTagged(spark, paths, "blooms")
-      .filter(vals.map(graft.index.BloomIndex.probe).reduce(_ || _))
-      .select("idx", "uid").distinct().collect()
-      .map(r => (r.getInt(r.fieldIndex("idx")), r.getLong(r.fieldIndex("uid"))))
-      .toSet
-    filesOf(paths, cands)
+    filesOf(paths, graft.api.IndexKind.probe(
+      graft.api.IndexKind.readTagged(spark, paths, "blooms")
+        .filter(vals.map(graft.index.BloomIndex.probe).reduce(_ || _))))
   }
 
   /** STRICTLY integral literals. The dataType check matters: a
@@ -1543,12 +1534,8 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
       val loE = graft.index.ZoneMapIndex.boundExpr(dt, lo)
       val hiE = graft.index.ZoneMapIndex.boundExpr(dt, hi)
       // ONE tagged scan + collect across all covering indexes
-      val cands = zones
-        .filter(col("hi") >= loE && col("lo") <= hiE) // overlap test
-        .select("idx", "uid").collect()
-        .map(r => (r.getInt(r.fieldIndex("idx")), r.getLong(r.fieldIndex("uid"))))
-        .toSet
-      filesOf(paths, cands)
+      filesOf(paths, graft.api.IndexKind.probe(
+        zones.filter(col("hi") >= loE && col("lo") <= hiE))) // overlap test
     }
   }
 
@@ -1581,20 +1568,9 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
     * gram in `qgrams` (shared by the contains and rlike probes).
     */
   private def probeGrams(paths: Seq[String],
-      qgrams: Seq[String]): Set[String] = {
-    val qbuckets = qgrams.map(NgramIndex.bucketOfString).distinct
+      qgrams: Seq[String]): Set[String] =
     // ONE tagged scan + intersection across all covering indexes
-    val cands = graft.api.IndexKind.readTagged(spark, paths, "postings")
-      .filter(col("bucket").isin(qbuckets: _*) &&
-        col("gram").isin(qgrams: _*))
-      .groupBy(col("idx"), col("uid"))
-      .agg(countDistinct(col("gram")).as("ng"))
-      .filter(col("ng") === qgrams.size)
-      .select("idx", "uid").collect()
-      .map(r => (r.getInt(r.fieldIndex("idx")), r.getLong(r.fieldIndex("uid"))))
-      .toSet
-    filesOf(paths, cands)
-  }
+    filesOf(paths, graft.api.IndexKind.postingUnits(spark, paths, qgrams))
 }
 
 object IndexPruneRule {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.api.{FmKind, GraftLake, IndexKind, NgramKind, TokenKind}
+import graft.api._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the facade's central scale claim: a search runs a CONSTANT
@@ -166,6 +167,80 @@ class JobCountSpec extends AnyFunSuite {
     assert(ids() == Set(1L, 2L, 3L)) // cold: pays the fetch jobs once
     val j = jobs("sm-serve-warm") { assert(ids() == Set(1L, 2L, 3L)) }
     assert(j == 0, s"warm smartSearch ran $j Spark jobs")
+  }
+
+  /** Jobs of `f` as (stage count, ran inside a SQL execution) pairs.
+    * A bare `spark.read.parquet` infers its schema in a job OUTSIDE any
+    * SQL execution, which is how schema-inference jobs are told apart.
+    */
+  private def jobShapes(group: String)(f: => Unit): Seq[(Int, Boolean)] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add((e.stageInfos.size,
+            e.properties.getProperty("spark.sql.execution.id") != null))
+    }
+    sc.addSparkListener(l)
+    try {
+      val n = jobs(group)(f)
+      // listener delivery is asynchronous
+      val deadline = System.nanoTime() + 10000000000L
+      while (seen.size < n && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.size == n, s"listener saw ${seen.size} of $n jobs")
+      seen.toArray.toSeq.map(_.asInstanceOf[(Int, Boolean)])
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("row-group probe kinds: a warm facade search probes in ONE shuffle-free job") {
+    // 4 index groups per kind; the needle rows 1-3 sit in the first
+    // file, so every search takes the index route
+    val dir = TestSpark.tmpDir("jobs-probe")
+    (1L to 48L).map { i =>
+      (i, s"k$i", s"row $i body ${if (i <= 3) "needle thread" else "plain filler"}")
+    }.toDF("doc_id", "sku", "text")
+      .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
+      .write.mode("overwrite").parquet(s"$dir/t")
+    val lake = GraftLake(spark, s"$dir/t")
+    val cases: Seq[(IndexKind, String, String, Set[Long])] = Seq(
+      (NgramKind, "text", "needle thread", Set(1L, 2L, 3L)),
+      (NgramRegexKind, "text", "needle th[a-z]+", Set(1L, 2L, 3L)),
+      (BoolNgramKind, "text", "needle AND NOT filler", Set(1L, 2L, 3L)),
+      (TokenKind, "text", "needle thread", Set(1L, 2L, 3L)),
+      (FuzzyKind, "text", "neadle thred", Set(1L, 2L, 3L)),
+      (KeyKind, "sku", "k2", Set(2L)),
+      (BloomKind, "sku", "k2", Set(2L)),
+      (ZoneMapKind, "doc_id", "2..3", Set(2L, 3L)),
+      (MinHashKind, "text", "row 2 body needle thread", Set(2L)))
+    // the regex and boolean modes ride the ngram index
+    for ((kind, column) <- cases.map(c => (c._1.name, c._2)).distinct)
+      assert(lake.index(cases.find(_._1.name == kind).get._1, column,
+        binpackRows = 1).size == 4)
+    for ((kind, column, query, want) <- cases) {
+      val tag = s"probe-${kind.getClass.getSimpleName}"
+      // plan construction runs the candidate probe and nothing else;
+      // the action runs the selective fetch + refine
+      def run(pass: String): (Seq[(Int, Boolean)], Seq[(Int, Boolean)]) = {
+        var df: org.apache.spark.sql.DataFrame = null
+        val plan = jobShapes(s"$tag-plan-$pass") {
+          df = lake.search(kind, column, query, 1000, Seq("doc_id"))
+        }
+        var ids = Set.empty[Long]
+        val exec = jobShapes(s"$tag-exec-$pass") {
+          ids = df.select("doc_id").collect().map(_.getLong(0)).toSet
+        }
+        assert(ids == want, s"$tag: wrong results")
+        (plan, exec)
+      }
+      run("cold") // fills the meta, footer-schema and head caches
+      val (plan, exec) = run("warm")
+      assert(plan == Seq((1, true)),
+        s"$tag: candidate probe ran as $plan, want ONE single-stage job")
+      assert((plan ++ exec).forall(_._2),
+        s"$tag: schema-inference job in ${plan ++ exec}")
+    }
   }
 
   test("fm search jobs do not grow with covering-index count") {

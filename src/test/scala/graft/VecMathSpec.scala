@@ -135,6 +135,28 @@ class VecMathSpec extends AnyFunSuite {
     assert(got(1)._2 == Seq(1L | (1L << 4)))  // bits 0 and 4 only
   }
 
+  test("sign_pack n=0: an empty vector packs to zero words") {
+    // the one divergence from the fold (which errors on n=0 under ANSI)
+    val got = Seq((1L, Seq.empty[Double])).toDF("id", "v")
+      .select(GraftExtensions.signPack(spark, col("v"))).head().getSeq[Long](0)
+    assert(got.isEmpty)
+    assert(graft.ops.BinaryQuant.packSigns(Seq.empty).isEmpty)
+  }
+
+  test("nb_score_pack rejects a value array shorter than the class count at analysis") {
+    GraftExtensions.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      "SELECT nb_score_pack(array('a'), " +
+        "map('a', array(1L, 2L), 'b', array(3L)), 2)"))
+    assert(e.getMessage.contains(
+      "model value for 'b' has 1 counts, fewer than the class count 2"),
+      e.getMessage)
+    // a well-formed model analyses and scores: (hits, per-class sums)
+    val ok = spark.sql("SELECT nb_score_pack(array('a', 'b', 'z'), " +
+      "map('a', array(1L, 2L), 'b', array(3L, 4L)), 2)").head().getSeq[Long](0)
+    assert(ok == Seq(2L, 4L, 6L))
+  }
+
   test("hamming_dist is bit-identical to the popcount fold") {
     val words = (0L until 40L).map(i =>
       (i, Seq.fill(3)(rnd.nextLong()), Seq.fill(3)(rnd.nextLong())))
