@@ -182,13 +182,14 @@ case class GraftLake(spark: SparkSession, backend: LakeBackend) {
     }
     val live = backend.filesAt(snapshot).toSet
     val cov0 = coverage(kind, column)
-    // ranked kinds return a LAZY plan whose index-table reads execute
-    // after search() returns — the missing-file catch below can never
-    // fire for them, so a half-deleted index (crashed vacuum) would be
-    // a permanent per-action crash loop. Classify integrity by the
-    // _GRAFT_DONE marker UP FRONT instead (deleteRec removes the
-    // marker first, so a half-deleted dir is marker-less); every
-    // ranked-kind build path goes through ensure() and carries one.
+    // a ranked kind may return a LAZY plan (bm25 at analytical k or
+    // with an in-situ part, vector plans) whose index reads execute
+    // after search() returns, where the missing-file catch below can
+    // never fire: a half-deleted index (crashed vacuum) would be a
+    // per-action crash loop. Classify integrity by the _GRAFT_DONE
+    // marker UP FRONT instead (deleteRec removes the marker first, so a
+    // half-deleted dir is marker-less); every ranked-kind build path
+    // goes through ensure() and carries one.
     val cov =
       if (!kind.ranked) cov0
       else {

@@ -455,6 +455,8 @@ object BoolNgramKind extends IndexKind {
 }
 
 /** BM25 ranked full-text kind. `idCol` is the per-row document id.
+  * A fully covered search at search-box k rides the warm scorer
+  * ([[graft.index.Serve.bm25Weighted]]: zero jobs warm, same rows).
   * Uncovered files are scored IN-SITU at query time (postings + doc
   * stats computed on the fly for the query tokens, reference fills from
   * unindexed files the same way, backends/utils.py:249-275) and unioned
@@ -490,28 +492,26 @@ case class Bm25Kind(idCol: String,
       require(stale.isEmpty,
         s"bm25 index covers ${stale.size} file(s) not in the queried snapshot; re-index first")
     }
+    require(paths.nonEmpty || insituFiles.nonEmpty, "no live files to search")
     val terms = tokenizer.tokenizeQuery(query).distinct.map(_ -> 1.0)
     val qtoks = terms.map(_._1)
-    val qbuckets = qtoks.map(Bm25Index.bucketOfString).distinct
-    // one tagged scan per sub-table across every covering index (the
-    // same constant-jobs discipline as the other kinds); doc_ids are
-    // globally unique so the ordinal tag is dropped after the read
-    val idxParts =
-      if (paths.isEmpty) Seq.empty
-      else Seq((
-        IndexKind.readTagged(spark, paths, "postings")
-          .filter(col("bucket").isin(qbuckets: _*) && col("token").isin(qtoks: _*))
-          .select(col("token"), col("doc_id"), col("tf")),
-        IndexKind.readTagged(spark, paths, "docstats").drop("idx")))
-    val insituParts =
-      if (insituFiles.isEmpty) Seq.empty
-      else Seq(Bm25Index.insituStats(spark, insituFiles, column, idCol,
-        qtoks, tokenizer))
-    val all = idxParts ++ insituParts
-    require(all.nonEmpty, "no live files to search")
-    Bm25Index.scoreWeighted(spark,
-      all.map(_._1).reduce(_ unionByName _),
-      all.map(_._2).reduce(_ unionByName _), terms, k)
+    if (insituFiles.isEmpty)
+      // the warm scorer materializes ≤ k rows on the driver: only in
+      // the search-box regime; analytical k keeps the lazy plan
+      return if (k <= GraftLake.SmartMaterializeMaxK)
+        graft.index.Serve.bm25Weighted(spark, paths, terms, k)
+      else Bm25Index.searchWeightedMany(spark, paths, terms, k)
+    val insitu @ (_, idl) = Bm25Index.insituStats(spark, insituFiles,
+      column, idCol, qtoks, tokenizer)
+    val all = (if (paths.isEmpty) Seq.empty
+      else Seq(Bm25Index.indexStats(spark, paths, qtoks))) :+ insitu
+    // the covered part's corpus stats come from the cached heads; only
+    // the in-situ docs pay an aggregate
+    val (covDocs, covDl) = Bm25Index.corpusStats(spark, paths)
+    val (inDocs, inDl) = Bm25Index.dlStats(idl)
+    Bm25Index.scoreWeighted(spark, all.map(_._1).reduce(_ unionByName _),
+      all.map(_._2).reduce(_ unionByName _), terms, k,
+      (covDocs + inDocs, covDl + inDl))
   }
 }
 

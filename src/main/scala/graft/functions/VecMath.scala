@@ -181,29 +181,27 @@ case class LshSigPack(left: Expression, right: Expression)
           s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
     else if (!right.foldable)
       TypeCheckResult.TypeCheckFailure("lsh_sig coefs must be a literal")
-    else {
-      // a null matrix or a null row would NPE in mat's materialization
-      // below — reject it as a type error at analysis time instead
-      val arr = right.eval()
-      if (arr == null)
-        TypeCheckResult.TypeCheckFailure("lsh_sig coefs must be non-null")
-      else {
-        val ad = arr.asInstanceOf[ArrayData]
-        if ((0 until ad.numElements()).exists(ad.isNullAt))
-          TypeCheckResult.TypeCheckFailure(
-            "lsh_sig coefs rows must be non-null")
-        else TypeCheckResult.TypeCheckSuccess
-      }
-    }
+    else coefs.fold(TypeCheckResult.TypeCheckFailure(_),
+      _ => TypeCheckResult.TypeCheckSuccess)
   }
 
-  // the hyperplane matrix, materialized once per expression instance
-  @transient private lazy val mat: Array[Array[Long]] = {
-    val arr = right.eval().asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map { b =>
-      arr.getArray(b).toLongArray()
-    }.toArray
-  }
+  // the hyperplane matrix, evaluated ONCE (the analyzer re-checks types
+  // every rule pass); a null matrix/row or a throwing eval is a type error
+  @transient private lazy val coefs: Either[String, Array[Array[Long]]] =
+    try right.eval() match {
+      case null => scala.util.Left("lsh_sig coefs must be non-null")
+      case ad: ArrayData =>
+        if ((0 until ad.numElements()).exists(ad.isNullAt))
+          scala.util.Left("lsh_sig coefs rows must be non-null")
+        else scala.util.Right(Array.tabulate(ad.numElements())(
+          ad.getArray(_).toLongArray()))
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        scala.util.Left(s"lsh_sig coefs failed to evaluate: ${e.getMessage}")
+    }
+
+  @transient private lazy val mat: Array[Array[Long]] =
+    coefs.fold(why => throw new IllegalStateException(why), identity)
 
   private def sigOf(x: ArrayData): Long = {
     val n = x.numElements()

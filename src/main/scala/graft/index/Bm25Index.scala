@@ -152,57 +152,54 @@ object Bm25Index {
     */
   def searchWeightedMany(spark: SparkSession, paths: Seq[String],
       terms: Seq[(String, Double)], k: Int): DataFrame = {
-    val qtoks = terms.map(_._1)
-    val qbuckets = qtoks.map(bucketOfString).distinct
-    // one tagged scan per sub-table (per-index reads would pay a
-    // listing/schema job per covering index; a bare multi-root read of
-    // the bucket-partitioned postings trips Spark's conflicting-
-    // directory check); doc_ids are globally unique so the tag drops
-    val dl = graft.api.IndexKind.readTagged(spark, paths, "docstats")
-      .drop("idx")
-    val post = graft.api.IndexKind.readTagged(spark, paths, "postings")
-      .filter(col("bucket").isin(qbuckets: _*) && col("token").isin(qtoks: _*))
-      .select(col("token"), col("doc_id"), col("tf"))
-    // corpus stats from the 1-row-per-index head tables (the
-    // "cacheable metadata page", reference bm25.rs:171-173): exact
-    // integer sums combine across covering indexes, so scores are
-    // bit-identical to the docstats aggregate while scanning
-    // paths.size rows instead of every doc. Heads written before the
-    // sum_dl column (or unreadable) fall back to the docstats job.
-    val stats =
-      try {
-        val h = graft.api.IndexKind.readTagged(spark, paths, "head")
-          .agg(count(lit(1)), count(col("sum_dl")),
-            sum(col("n_docs")), sum(col("sum_dl"))).collect()(0)
-        // EVERY covering index must contribute one complete head row —
-        // a mixed old/new-schema set reads the old heads' sum_dl as
-        // NULL and a bare sum would silently partial-sum the corpus
-        if (h.getLong(0) != paths.size.toLong || h.getLong(1) != h.getLong(0))
-          None
-        else Some((h.getLong(2), h.getLong(3)))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    scoreWeighted(spark, post, dl, terms, k, stats)
+    val (post, dl) = indexStats(spark, paths, terms.map(_._1))
+    scoreWeighted(spark, post, dl, terms, k, corpusStats(spark, paths))
+  }
+
+  /** Query-token postings `(token, doc_id, tf)` + doc stats `(doc_id,
+    * dl)` of the covering indexes ([[insituStats]]' index twin): one
+    * tagged scan per sub-table, not a read per index (a listing job
+    * each) or a multi-root read (Spark rejects the bucket= layouts).
+    */
+  def indexStats(spark: SparkSession, paths: Seq[String],
+      qtoks: Seq[String]): (DataFrame, DataFrame) =
+    (graft.api.IndexKind.readTagged(spark, paths, "postings")
+      .filter(col("bucket").isin(qtoks.map(bucketOfString).distinct: _*) &&
+        col("token").isin(qtoks: _*))
+      .select(col("token"), col("doc_id"), col("tf")),
+    graft.api.IndexKind.readTagged(spark, paths, "docstats").drop("idx"))
+
+  /** Global `(n_docs, Σdl)` of the covering indexes: the per-index
+    * corpus stats ([[Serve.corpusStats]]: the 1-row head, cached per
+    * meta signature) summed. Postings/docstats are disjoint by doc, and
+    * both are exact integer sums, so the total equals one aggregate
+    * over the union of the docstats tables.
+    */
+  def corpusStats(spark: SparkSession, paths: Seq[String]): (Long, Long) = {
+    val st = paths.map(Serve.corpusStats(spark, _))
+    (st.map(_._1).sum, st.map(_._2).sum)
+  }
+
+  /** `(n_docs, Σdl)` of a doc-stats frame `(doc_id, dl)`: one aggregate
+    * job (zero docs sum to 0, not NULL).
+    */
+  def dlStats(dl: DataFrame): (Long, Long) = {
+    val r = dl.agg(count(lit(1)), sum(col("dl"))).collect()(0)
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
   /** Score pre-filtered query-token postings `(token, doc_id, tf)`
-    * against doc stats `(doc_id, dl)`. Factored out so callers can
-    * union index-table postings with postings computed on the fly from
-    * UNINDEXED files (the reference fills results from in-situ files,
-    * backends/utils.py:249-275) — corpus stats stay global and exact.
+    * against doc stats `(doc_id, dl)` and corpus `(n_docs, Σdl)`.
+    * Factored out so callers can union index-table postings with
+    * postings computed on the fly from UNINDEXED files (the reference
+    * fills results from in-situ files, backends/utils.py:249-275) —
+    * corpus stats stay global and exact.
     */
   def scoreWeighted(spark: SparkSession, post: DataFrame, dl: DataFrame,
-      terms: Seq[(String, Double)], k: Int,
-      stats: Option[(Long, Long)] = None,
+      terms: Seq[(String, Double)], k: Int, stats: (Long, Long),
       restrictTo: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    // (n_docs, sum_dl) from the caller's head tables when available;
-    // otherwise one aggregate over docstats. Both are exact integer
-    // sums, so the score arithmetic is identical either way.
-    val (nDocs, sumDl) = stats.getOrElse {
-      val corpus =
-        dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("len")).collect()(0)
-      (corpus.getLong(0), if (corpus.isNullAt(1)) 0L else corpus.getLong(1))
-    }
+    val (nDocs, sumDl) = stats
     // empty corpus (all-NULL column, zero-row files): sum() is null and
     // avgdl would divide by zero — the correct top-k is empty
     if (nDocs == 0)
@@ -273,7 +270,7 @@ object Bm25Index {
       .select(col(idCol).as("doc_id"))
     val dl = spark.read.parquet(s"$path/docstats")
     scoreWeighted(spark, post.select("token", "doc_id", "tf"), dl,
-      qtoks.map(_ -> 1.0), k, None, Some(verified))
+      qtoks.map(_ -> 1.0), k, corpusStats(spark, Seq(path)), Some(verified))
   }
 
   /** Query-token postings + doc stats computed on the fly from raw lake

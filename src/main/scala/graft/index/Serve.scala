@@ -579,17 +579,18 @@ object Serve {
   /** Warm twin of [[Bm25Index.searchWeightedMany]]: global corpus
     * stats summed across the covering indexes' head rows, df summed
     * across per-index token slices — the same global-IDF argument.
+    * Also the facade's ranked route ([[graft.api.Bm25Kind]], graft_rank).
     */
   def bm25Weighted(spark: SparkSession, paths: Seq[String],
       terms: Seq[(String, Double)], k: Int): DataFrame = {
     import spark.implicits._
-    // dl tables past the budget → Spark path (identical result)
-    if (paths.exists(p => totalRows(spark, p) > MaxServeRows))
+    // every index's dl table is held at once: past the budget IN SUM
+    // (not per index) → Spark path (identical result)
+    if (paths.map(totalRows(spark, _)).sum > MaxServeRows)
       return Bm25Index.searchWeightedMany(spark, paths, terms, k)
     val qtoks = terms.map(_._1)
     val perPath = paths.map(p => p -> tokenSlices(spark, p, qtoks)).toMap
-    val stats = paths.map(statsOf(spark, _))
-    val (nDocs, sumDl) = (stats.map(_._1).sum, stats.map(_._2).sum)
+    val (nDocs, sumDl) = Bm25Index.corpusStats(spark, paths)
     if (nDocs == 0)
       return Seq.empty[(Long, Double)].toDF("doc_id", "score")
     val avgdl = sumDl.toDouble / nDocs
@@ -597,8 +598,9 @@ object Serve {
       t -> paths.map(p => perPath(p)(t).length.toLong).sum).toMap
     val acc = scala.collection.mutable.HashMap.empty[Long, Long]
     for (p <- paths) {
-      val dl = dlOf(spark, p)
-      for ((t, qw) <- terms; if df(t) > 0L) {
+      // an index holding none of the query tokens never loads its dl
+      lazy val dl = dlOf(spark, p)
+      for ((t, qw) <- terms; if perPath(p)(t).nonEmpty) {
         val idf = math.log(
           (nDocs.toDouble - df(t) + 0.5) / (df(t) + 0.5) + 1.0)
         perPath(p)(t).foreach { case (doc, tf) =>
@@ -757,10 +759,12 @@ object Serve {
       Seq("doc_id", "tf"), Bm25Index.bucketOfString,
       r => (r.getLong(1), r.getLong(2)), identity)
 
-  /** (n_docs, sum_dl) of one index — head row when complete, docstats
-    * aggregate otherwise (the searchWeightedMany fallback), cached.
+  /** `(n_docs, Σdl)` of one bm25 index, cached per (path, meta
+    * signature): the head row, or a docstats aggregate for heads
+    * written before the sum_dl column. Every ranked search reads it.
     */
-  private def statsOf(spark: SparkSession, path: String): (Long, Long) = {
+  private[graft] def corpusStats(spark: SparkSession,
+      path: String): (Long, Long) = {
     val ver = verOf(spark, path)
     statsCache.get((path, ver)) match {
       case Some(s) => s
@@ -774,11 +778,8 @@ object Serve {
               Some((rows(0).getLong(0), rows(0).getLong(1)))
             else None
           } catch { case scala.util.control.NonFatal(_) => None }
-        val s = fromHead.getOrElse {
-          val r = spark.read.parquet(s"$path/docstats")
-            .agg(count(lit(1)), sum(col("dl"))).collect()(0)
-          (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-        }
+        val s = fromHead.getOrElse(
+          Bm25Index.dlStats(spark.read.parquet(s"$path/docstats")))
         // the same refuse-to-cache-across-a-rebuild re-stat every
         // other fetch path applies — without it a racing rebuild
         // would poison (path, oldVer) with the NEW corpus stats and
@@ -1208,7 +1209,7 @@ object Serve {
       // posting slice (grouped from one whole-postings read), so the
       // first ranked query of any in-vocabulary term is job-free
       val ver = verOf(spark, path)
-      statsOf(spark, path)
+      corpusStats(spark, path)
       val dl = dlOf(spark, path)
       val vocab = vocabOf(spark, path)
       val rows = spark.read.parquet(s"$path/postings")

@@ -280,6 +280,69 @@ class GraftLakeSpec extends AnyFunSuite {
     val ids = lake.search(kind, "text", "Apple", 10)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(ids == Seq(1L)) // the default tokenizer would match both docs
+    // the warm route scores the kind's own query tokens: a repeat runs
+    // no job and equals the Spark plan over the same index
+    val paths = lake.coverageByName(kind.name, "text").map(_._1)
+    val viaPlan = graft.index.Bm25Index.searchWeightedMany(spark, paths,
+      Seq("Apple" -> 1.0), 10).collect().toSeq
+    var warm = Seq.empty[org.apache.spark.sql.Row]
+    assert(jobs("bm25-ws-warm") {
+      warm = lake.search(kind, "text", "Apple", 10).collect().toSeq
+    } == 0)
+    assert(warm == viaPlan)
+  }
+
+  private def jobs(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("warm bm25 search re-scores after an in-place re-index") {
+    val dir = TestSpark.tmpDir("apilake-reindex")
+    def put(name: String, rows: Seq[(Long, String)]): Unit = {
+      val staging = TestSpark.tmpDir(s"stage-reindex-$name")
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(staging)
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(graft.core.Lake.listFiles(staging).head),
+        java.nio.file.Paths.get(s"$dir/$name.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    put("a", Seq(1L -> "apple pie recipe", 2L -> "banana bread"))
+    put("b", Seq(3L -> "cherry apple jam", 4L -> "plain toast"))
+    val lake = GraftLake(spark, dir)
+    val kind = Bm25Kind("doc_id")
+    assert(lake.index(kind, "text", binpackRows = 2).size == 2)
+    val q = "apple recipe"
+    def ranked(): Seq[(Long, Double)] =
+      lake.search(kind, "text", q, 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // a fresh whole-corpus index over the lake as it is now
+    def reference(): Seq[(Long, Double)] = {
+      val whole = TestSpark.tmpDir("apilake-reindex-whole")
+      graft.index.Bm25Index.build(spark,
+        graft.core.Lake.listFiles(dir), "text", "doc_id", whole)
+      graft.index.Bm25Index.search(spark, whole, q, 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+    val before = reference()
+    assert(ranked() == before)
+    assert(jobs("bm25-reindex-warm") { assert(ranked() == before) } == 0)
+    // rewrite a.parquet (new docs, new lengths, more apples) and rebuild
+    // its covering index in the same dir: the meta signature moves
+    put("a", Seq(5L -> "apple apple recipe", 6L -> "apple tart",
+      7L -> "long banana bread recipe with apple and more words"))
+    val pa = lake.coverageByName(kind.name, "text")
+      .find(_._2.exists(_.endsWith("a.parquet"))).get._1
+    graft.index.Bm25Index.build(spark,
+      graft.core.Lake.listFiles(dir).filter(_.endsWith("a.parquet")),
+      "text", "doc_id", pa)
+    val after = reference()
+    assert(after != before)
+    // new token slices, dl table and corpus stats: no stale cache entry
+    assert(ranked() == after)
   }
 
   test("token kind runs the facade lifecycle with sequence semantics") {

@@ -243,6 +243,58 @@ class JobCountSpec extends AnyFunSuite {
     }
   }
 
+  test("bm25 facade search and graft_rank score warm: ZERO jobs, Spark-plan rows") {
+    // two index groups over a fully covered lake: a warm ranked search
+    // rides the driver scorer, and its rows equal the Spark plan over
+    // the same indexes (global IDF). An in-situ file or an analytical k
+    // keeps the Spark plan, with the same rows.
+    val dir = TestSpark.tmpDir("jobs-bm25")
+    (1L to 48L).map { i =>
+      i -> s"row $i body ${if (i % 5 == 0) "needle needle thread" else "plain filler"}"
+    }.toDF("doc_id", "text")
+      .repartitionByRange(2, org.apache.spark.sql.functions.col("doc_id"))
+      .write.mode("overwrite").parquet(s"$dir/t")
+    GraftExtensions.register(spark)
+    val lake = GraftLake(spark, s"$dir/t")
+    val kind = Bm25Kind("doc_id")
+    val paths = lake.index(kind, "text", binpackRows = 1)
+    assert(paths.size == 2)
+    val q = "needle thread body"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def viaPlan(k: Int): Seq[(Long, Double)] = {
+      val ps = lake.coverageByName(kind.name, "text").map(_._1)
+      rows(graft.index.Bm25Index.searchWeightedMany(spark, ps,
+        q.split(" ").toSeq.map(_ -> 1.0), k))
+    }
+    def facade(k: Int) = rows(lake.search(kind, "text", q, k))
+    def sqlRank(k: Int) = rows(spark.sql(
+      s"SELECT doc_id, score FROM graft_rank('$dir/t', 'bm25', 'text', " +
+        s"'$q', $k, 'doc_id')"))
+    val want = viaPlan(10)
+    assert(want.size == 10)
+    for ((name, run) <- Seq("facade" -> (() => facade(10)),
+        "graft_rank" -> (() => sqlRank(10)))) {
+      assert(run() == want, s"$name: cold rows differ from the Spark plan")
+      var warm = Seq.empty[(Long, Double)]
+      val j = jobs(s"bm25-warm-$name") { warm = run() }
+      assert(warm == want, s"$name: warm rows differ from the Spark plan")
+      assert(j == 0, s"warm $name ran $j Spark jobs")
+    }
+    // analytical k: the lazy Spark plan, same rows
+    val bigK = GraftLake.SmartMaterializeMaxK + 1
+    var big = Seq.empty[(Long, Double)]
+    assert(jobs("bm25-bigk") { big = facade(bigK) } >= 1)
+    assert(big == viaPlan(bigK))
+    // an uncovered file: the in-situ union plan, same rows as indexing it
+    Seq(100L -> "late needle thread").toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(s"$dir/t")
+    var insitu = Seq.empty[(Long, Double)]
+    assert(jobs("bm25-insitu") { insitu = facade(10) } >= 1)
+    lake.index(kind, "text", binpackRows = 1)
+    assert(insitu == viaPlan(10) && insitu.exists(_._1 == 100L))
+  }
+
   test("fm search jobs do not grow with covering-index count") {
     val small = mkLake("jobs-fm-2", 2, FmKind)
     val big = mkLake("jobs-fm-8", 8, FmKind)

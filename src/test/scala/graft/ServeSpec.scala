@@ -162,6 +162,36 @@ class ServeSpec extends AnyFunSuite {
     assert(fast == viaSpark && fast.nonEmpty)
   }
 
+  test("bm25 serve budget is the SUM of the covering indexes' rows") {
+    // each index fits the budget on its own, both together do not: the
+    // warm scorer would hold both dl tables, so the Spark path answers
+    val a = TestSpark.tmpDir("serve-bm25-suma")
+    val b = TestSpark.tmpDir("serve-bm25-sumb")
+    Bm25Index.build(spark, files.take(1), "text", "doc_id", a)
+    Bm25Index.build(spark, files.drop(1), "text", "doc_id", b)
+    def rowsOf(p: String) = graft.api.IndexKind.metaRows(spark, p).map(_._4).sum
+    val (ra, rb) = (rowsOf(a), rowsOf(b))
+    val terms = Seq("vector" -> 1.0, "needle" -> 1.0, "tail" -> 0.5)
+    val viaSpark = Bm25Index
+      .searchWeightedMany(spark, Seq(a, b), terms, 10).collect().toSeq
+    Serve.clearCaches()
+    // fill the warm caches under the default budget: a served repeat
+    // would now run zero jobs
+    assert(Serve.bm25Weighted(spark, Seq(a, b), terms, 10)
+      .collect().toSeq == viaSpark)
+    val saved = Serve.MaxServeRows
+    try {
+      Serve.MaxServeRows = math.max(ra, rb)
+      assert(ra + rb > Serve.MaxServeRows)
+      var got = Seq.empty[org.apache.spark.sql.Row]
+      val j = jobs("serve-bm25-sum") {
+        got = Serve.bm25Weighted(spark, Seq(a, b), terms, 10).collect().toSeq
+      }
+      assert(j >= 1, "an over-budget lake was served from the driver")
+      assert(got == viaSpark && got.nonEmpty)
+    } finally Serve.MaxServeRows = saved
+  }
+
   test("wildcard fast path: bit-identical ranked rows, zero jobs warm") {
     // prefix expands to several vocab tokens (vector, ...): the warm
     // expansion must equal the postings startsWith scan, and scoring

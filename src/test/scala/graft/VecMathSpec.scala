@@ -97,6 +97,30 @@ class VecMathSpec extends AnyFunSuite {
     assert(got.forall(_._2 == 0L))
   }
 
+  test("lsh_sig evaluates its coefs once; a throwing eval is a type error") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val evals = new java.util.concurrent.atomic.AtomicInteger
+    val vq = Literal.create(Seq(1L, 2L), ArrayType(LongType))
+    val mat = Literal.create(Seq(Seq(1L, -1L), Seq(-1L, 1L)),
+      ArrayType(ArrayType(LongType)))
+    val e = graft.functions.LshSigPack(vq, VecMathSpec.Coefs(mat, evals))
+    // the analyzer re-checks types on every pass: one evaluation in all
+    (1 to 3).foreach(_ => assert(e.checkInputDataTypes().isSuccess))
+    assert(evals.get == 1, s"coefs evaluated ${evals.get} times")
+    // the checked matrix is the one that scores: only bit 1 has dot >= 0
+    assert(e.eval() == 2L)
+    val bad = graft.functions.LshSigPack(vq,
+      VecMathSpec.Coefs(mat, evals, fail = true))
+    val r = bad.checkInputDataTypes()
+    assert(r.isFailure && r.toString.contains("lsh_sig coefs failed to evaluate"), r)
+    // through SQL: an analysis error naming the coefs, not a raw throw
+    GraftExtensions.register(spark)
+    val ex = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      "SELECT lsh_sig(array(1L), array(array(CAST('x' AS BIGINT))))"))
+    assert(ex.getMessage.contains("lsh_sig coefs"), ex.getMessage)
+  }
+
   test("sign_pack is bit-identical to the signBits fold (multi-word)") {
     // 130 dims → 3 packed words; mix of signs, zeros, and a positive
     // 64th/128th component so bit 63 of words 0 and 1 is exercised
@@ -186,5 +210,28 @@ class VecMathSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
     assert(got.count(_._2 == null) == 2)
     assert(got(2)._2 == 64L) // -1L xor 0L = all 64 bits
+  }
+}
+
+object VecMathSpec {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+  import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+
+  /** A foldable coefs expression that counts its evaluations (and can
+    * throw), to pin how often `lsh_sig` evaluates its matrix.
+    */
+  case class Coefs(child: Expression,
+      evals: java.util.concurrent.atomic.AtomicInteger,
+      fail: Boolean = false) extends UnaryExpression with CodegenFallback {
+    override def dataType = child.dataType
+    override def foldable: Boolean = true
+    override def eval(input: InternalRow): Any = {
+      evals.incrementAndGet()
+      if (fail) throw new ArithmeticException("boom")
+      child.eval(input)
+    }
+    override protected def withNewChildInternal(c: Expression): Coefs =
+      copy(child = c)
   }
 }
