@@ -1,19 +1,23 @@
 #!/usr/bin/env python3
-"""Per-op-kind latency of the last lake_search run in one or two checkouts.
+"""Per-op-kind latency of lake_search runs, one side or parent vs change.
 
-Reads perfbench/.run/lake_search/out/ops.jsonl under each checkout (the
-timed window only; untraced operations when the run was traced) and
-prints, per op kind, the samples in ms, their median and their sum. The
-sums add up to the window's busy time, so a move in op_p50_ms, op_tail_ms
-or throughput_per_s can be attributed to the kinds that caused it.
+Reads ops.jsonl files (the timed window only; untraced operations when a
+run was traced) and prints, per op kind, the samples in ms, their median
+and their sum. The sums add up to the window's busy time, so a move in
+op_p50_ms, op_tail_ms or throughput_per_s can be attributed to the kinds
+that caused it. A checkout stands for its last run,
+perfbench/.run/lake_search/out/ops.jsonl; several files on one side pool
+their samples (e.g. one copy of ops.jsonl per seed of an A/B).
 
-    python3 dev/op_kinds.py CHECKOUT
+    python3 dev/op_kinds.py CHECKOUT_OR_OPS_JSONL
     python3 dev/op_kinds.py PARENT_CHECKOUT CHANGE_CHECKOUT
+    python3 dev/op_kinds.py --parent a.jsonl b.jsonl --change c.jsonl d.jsonl
 
-With two checkouts it adds the change/parent ratio of each median and of
-each sum. ops.jsonl holds the last run only: run both sides on the same
-seed before comparing.
+With two sides it adds the change/parent ratio of each median and of
+each sum. A checkout's ops.jsonl holds its last run only: run both sides
+on the same seeds before comparing.
 """
+import argparse
 import json
 import os
 import statistics
@@ -22,19 +26,20 @@ import sys
 OPS = os.path.join("perfbench", ".run", "lake_search", "out", "ops.jsonl")
 
 
-def load(checkout):
-    """{op kind: [ms, ...]} of the timed window of one checkout's last run."""
-    path = os.path.join(checkout, OPS)
-    with open(path) as f:
-        ops = [json.loads(line) for line in f if line.strip()]
-    timed = [o for o in ops if o["phase"] == "timed"]
-    if any(o["traced"] for o in timed):
-        timed = [o for o in timed if not o["traced"]]
-    if not timed:
-        sys.exit(f"{path}: no timed operations")
+def load(paths):
+    """{op kind: [ms, ...]} pooled over the timed windows of `paths`."""
     by_kind = {}
-    for o in timed:
-        by_kind.setdefault(o["name"], []).append(o["ms"])
+    for p in paths:
+        path = os.path.join(p, OPS) if os.path.isdir(p) else p
+        with open(path) as f:
+            ops = [json.loads(line) for line in f if line.strip()]
+        timed = [o for o in ops if o["phase"] == "timed"]
+        if any(o["traced"] for o in timed):
+            timed = [o for o in timed if not o["traced"]]
+        if not timed:
+            sys.exit(f"{path}: no timed operations")
+        for o in timed:
+            by_kind.setdefault(o["name"], []).append(o["ms"])
     return by_kind
 
 
@@ -46,9 +51,20 @@ def row(samples):
 
 
 def main(argv):
-    if len(argv) not in (1, 2):
-        sys.exit(__doc__)
-    sides = [load(c) for c in argv]
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawTextHelpFormatter)
+    ap.add_argument("sides", nargs="*", metavar="CHECKOUT_OR_OPS_JSONL",
+                    help="one side, or parent then change")
+    ap.add_argument("--parent", nargs="+", default=[], metavar="PATH")
+    ap.add_argument("--change", nargs="+", default=[], metavar="PATH")
+    args = ap.parse_args(argv)
+    if args.sides and (args.parent or args.change):
+        ap.error("give positional sides or --parent/--change, not both")
+    groups = ([g for g in (args.parent, args.change) if g]
+              or [[p] for p in args.sides])
+    if len(groups) not in (1, 2):
+        ap.error("want one side or two")
+    sides = [load(g) for g in groups]
     kinds = sorted(set().union(*sides))
     if len(sides) == 1:
         print(f"{'kind':<14}{'n':>3}{'p50_ms':>9}{'sum_ms':>9}  samples_ms")

@@ -2,8 +2,9 @@ package graft.api
 
 import graft.core.{IndexStore, Lake, Layout}
 import graft.ops.Maintenance
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** User-facing facade over one lake — the equivalent of the
   * reference's top-level API (reference: python/rottnest/backends/
@@ -134,6 +135,18 @@ case class GraftLake(spark: SparkSession, backend: LakeBackend) {
     * travels on versioned backends (reference: search_delta(snapshot),
     * backends/delta.py:63-72): hits are restricted to files live at
     * that version.
+    *
+    * Warm routes answer from the driver tier ([[graft.index.Serve]]),
+    * zero Spark jobs once its caches hold the query's slices and rows,
+    * with the Spark plan's rows: vector and vamana (ADC / beam +
+    * exact rerank), ngram and exact-mode key (point lookup, then the
+    * orderBy+limit tail driver-side). They share the preconditions: no
+    * snapshot, k ≤ [[GraftLake.SmartMaterializeMaxK]], and ONE
+    * covering index over every live file on a backend that cannot
+    * remove files ([[servablePath]]). Any decline (budget,
+    * non-selective probe, non-string key, non-atomic order column) runs
+    * the Spark plan unchanged. Ranked bm25 reaches the same tier inside
+    * [[Bm25Kind]], over any number of covering indexes.
     */
   def search(kind: IndexKind, column: String, query: String, k: Int,
       order: Seq[String] = Seq.empty,
@@ -224,10 +237,23 @@ case class GraftLake(spark: SparkSession, backend: LakeBackend) {
               .limit(0)
         }
       }
-      val res = kind.searchLake(spark, c.map(_._1), uncovered, column,
-        query, k, restrict)
-      if (kind.ranked) res
-      else res.orderBy(order.map(col): _*).limit(k)
+      // warm lexical route: inside attempt, so the missing-file retry
+      // below covers it too
+      val warm =
+        if (snapshot.nonEmpty || k > GraftLake.SmartMaterializeMaxK) None
+        else soleIndex(c, live).flatMap(p => kind match {
+          case NgramKind =>
+            graft.index.Serve.ngramRows(spark, p, column, query)
+          case KeyKind if !query.endsWith("%") =>
+            graft.index.Serve.keyRows(spark, p, column, query)
+          case _ => None
+        })
+      warm.flatMap(localTop(_, order, k)).getOrElse {
+        val res = kind.searchLake(spark, c.map(_._1), uncovered, column,
+          query, k, restrict)
+        if (kind.ranked) res
+        else res.orderBy(order.map(col): _*).limit(k)
+      }
     }
     try attempt(cov) catch {
       case e: Exception if GraftLake.missingFileCause(e) =>
@@ -324,33 +350,18 @@ case class GraftLake(spark: SparkSession, backend: LakeBackend) {
 
   /** smartSearch's exact route. In the search-box regime (small k) the
     * result is materialized ONCE and the fuzzy fallback decided on the
-    * rows; when the lake's shape allows it — one covering ngram index,
-    * zero in-situ files, no snapshot/version restriction, selective
-    * lookup — the rows come from the WARM SERVING TIER
-    * ([[graft.index.Serve]]) with zero Spark jobs in the steady state
-    * (pinned by JobCountSpec), the facade's orderBy+limit tail applied
-    * driver-side. Identical rows on every path.
+    * rows; [[search]]'s warm ngram route serves them with zero Spark
+    * jobs in the steady state when the lake's shape allows (pinned by
+    * JobCountSpec). Identical rows on every path.
     */
   private def exactRoute(column: String, q: String, k: Int,
       order: Seq[String], snapshot: Option[Long]): DataFrame = {
     if (k <= GraftLake.SmartMaterializeMaxK) {
-      val served =
-        if (snapshot.nonEmpty) None else serveExact(column, q)
-      served match {
-        case Some((rows, schema)) if rows.nonEmpty &&
-            graft.index.Serve.orderServable(schema, order) =>
-          val out = graft.index.Serve.orderLimit(rows, schema, order, k)
-          spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
-        case Some((rows, _)) if rows.isEmpty =>
-          fuzzyFallback(column, q, k, order, snapshot)
-        case _ =>
-          val exact = search(NgramKind, column, q, k, order, snapshot)
-          val rows = exact.collect()
-          if (rows.nonEmpty)
-            spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), exact.schema)
-          else fuzzyFallback(column, q, k, order, snapshot)
-      }
+      val exact = search(NgramKind, column, q, k, order, snapshot)
+      val rows = exact.collect()
+      if (rows.nonEmpty)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), exact.schema)
+      else fuzzyFallback(column, q, k, order, snapshot)
     } else {
       // analytical-sized k: a driver materialization of k rows is the
       // thing the no-data-scale-collect stance forbids, so the lazy
@@ -387,13 +398,8 @@ case class GraftLake(spark: SparkSession, backend: LakeBackend) {
       if (snapshot.nonEmpty || k > GraftLake.SmartMaterializeMaxK) None
       else servablePath(graft.api.FuzzyKind.name, column)
         .flatMap(p => graft.index.Serve.fuzzyRows(spark, p, column, q))
-    served match {
-      case Some((rows, schema))
-          if graft.index.Serve.orderServable(schema, order) =>
-        val out = graft.index.Serve.orderLimit(rows, schema, order, k)
-        spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
-      case _ => search(FuzzyKind, column, q, k, order, snapshot)
-    }
+    served.flatMap(localTop(_, order, k))
+      .getOrElse(search(FuzzyKind, column, q, k, order, snapshot))
   }
 
   /** The warm-servable precondition: exactly ONE covering index of
@@ -403,20 +409,33 @@ case class GraftLake(spark: SparkSession, backend: LakeBackend) {
     * ordinary Spark plan, same rows.
     */
   private def servablePath(kindName: String,
-      column: String): Option[String] = {
-    if (backend.canRemove) return None
-    val cov = coverageByName(kindName, column)
-    if (cov.size != 1) return None
-    val covered = cov.head._2.toSet
-    if (files.exists(f => !covered.contains(f))) return None
-    Some(cov.head._1)
+      column: String): Option[String] =
+    soleIndex(coverageByName(kindName, column), files)
+
+  /** [[servablePath]] over a coverage already in hand. */
+  private def soleIndex(cov: Seq[(String, Seq[String])],
+      live: Iterable[String]): Option[String] = cov match {
+    case Seq((p, covered)) if !backend.canRemove &&
+        live.forall(covered.toSet) => Some(p)
+    case _ => None
   }
 
-  private def serveExact(column: String, query: String)
-      : Option[(Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)] =
-    servablePath("ngram", column)
-      .flatMap(p => graft.index.Serve.ngramRows(spark, p, column, query))
+  /** Warm-served rows as the Spark plan answers them: the serving
+    * tier's internal `uid` column dropped, the facade's orderBy+limit
+    * tail applied driver-side. None when an order column is not
+    * driver-sortable ([[graft.index.Serve.orderServable]]) — the
+    * caller's Spark plan.
+    */
+  private def localTop(hit: (Seq[Row], StructType), order: Seq[String],
+      k: Int): Option[DataFrame] = {
+    val (rows, schema) = hit
+    val ui = schema.fieldIndex("uid")
+    val out = StructType(schema.fields.patch(ui, Nil, 1))
+    if (!graft.index.Serve.orderServable(out, order)) None
+    else Some(spark.createDataFrame(java.util.Arrays.asList(
+      graft.index.Serve.orderLimit(rows, schema, order, k)
+        .map(r => Row.fromSeq(r.toSeq.patch(ui, Nil, 1))): _*), out))
+  }
 
   /** Merge this (kind, column)'s indexes whose covered rows fall below
     * the threshold, commit (append-then-delete), vacuum. Returns the

@@ -504,24 +504,36 @@ object Serve {
     * Spark path.
     */
   def keyExact(spark: SparkSession, path: String, column: String,
-      key: String): DataFrame = {
-    keysOf(spark, path) match {
+      key: String): DataFrame =
+    keyRows(spark, path, column, key) match {
+      case Some((rows, schema)) => localDf(spark, rows, schema)
       case None => KeyIndex.searchExact(spark, path, column, key)
-      case Some((kc, pairs)) =>
-        val hexMode = kc == KeyIndex.HexKeyCol
-        val probe = if (hexMode) key.toUpperCase else key
-        val uids = equalRange(pairs, probe).map(_._2).distinct
+    }
+
+  /** The driver half of [[keyExact]]: the matching rows + schema, None
+    * when the lookup is not servable (key table past the budget, a
+    * non-string key column, or a hit set the cost switch would
+    * brute-scan) — the caller's Spark path.
+    */
+  private[graft] def keyRows(spark: SparkSession, path: String,
+      column: String, key: String): Option[(Seq[Row], StructType)] =
+    keysOf(spark, path).flatMap { case (kc, pairs) =>
+      val hexMode = kc == KeyIndex.HexKeyCol
+      val probe = if (hexMode) key.toUpperCase else key
+      val uids = equalRange(pairs, probe).map(_._2).distinct
+      if (uids.size > Lake.BruteForceThreshold ||
+          uids.size >= graft.api.IndexKind.metaRows(spark, path).size) None
+      else {
         val (rows, schema) = rowsOf(spark, path, uids)
         val ci = schema.fieldIndex(column)
-        val matched = rows.filter { r =>
+        Some((rows.filter { r =>
           if (r.isNullAt(ci)) false
           else if (hexMode)
             r.getAs[Array[Byte]](ci).map(b => f"$b%02X").mkString == probe
           else r.get(ci) == probe
-        }
-        localDf(spark, matched, schema)
+        }, schema))
+      }
     }
-  }
 
   /** Sorted (key, uid) table of one key index, or None past the cache
     * budget. One collect job on miss.

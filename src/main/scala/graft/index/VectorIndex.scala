@@ -634,16 +634,9 @@ object VectorIndex {
     }
   }
 
-  /** recall@k of an approximate result against the exact id set —
-    * the reference's own evaluation arithmetic (msmarco.py:47-56).
-    */
-  def recallAgainst(exact: Set[Long], approx: DataFrame, k: Int): Double =
-    exact.intersect(
-      approx.select("vec_id").collect().map(_.getLong(0)).toSet
-    ).size.toDouble / k
-
   /** Mean recall@k of a batched (qid, vec_id, …) result against the
-    * panel's exact id sets (qid = panel position).
+    * panel's exact id sets (qid = panel position) — the reference's
+    * own evaluation arithmetic (msmarco.py:47-56).
     */
   def meanRecallBatch(exact: Seq[Set[Long]], approx: DataFrame,
       k: Int): Double = {

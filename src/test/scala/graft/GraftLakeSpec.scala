@@ -345,6 +345,56 @@ class GraftLakeSpec extends AnyFunSuite {
     assert(ranked() == after)
   }
 
+  test("warm ngram and key searches see appends and in-place re-indexes") {
+    val dir = TestSpark.tmpDir("apilake-warm-lexical")
+    def put(name: String, rows: Seq[(Long, String)]): Unit = {
+      val staging = TestSpark.tmpDir(s"stage-warm-lexical-$name")
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(staging)
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(graft.core.Lake.listFiles(staging).head),
+        java.nio.file.Paths.get(s"$dir/$name.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    put("a", Seq(1L -> "apple pie", 2L -> "banana bread"))
+    put("b", Seq(3L -> "cherry jam", 4L -> "plain toast"))
+    val lake = GraftLake(spark, dir)
+    assert(lake.index(NgramKind, "text").size == 1)
+    assert(lake.index(KeyKind, "text").size == 1)
+    def ids(kind: graft.api.IndexKind, q: String): Seq[Long] =
+      lake.search(kind, "text", q, 10, Seq("doc_id"))
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+    def both(): (Seq[Long], Seq[Long]) =
+      (ids(NgramKind, "apple"), ids(KeyKind, "apple pie"))
+    // one covering index per kind, the hits in one of two row groups:
+    // a warm repeat is served with zero jobs
+    assert(both() == (Seq(1L), Seq(1L)))
+    assert(jobs("lexical-reindex-warm") {
+      assert(both() == (Seq(1L), Seq(1L)))
+    } == 0)
+    // rewrite a.parquet and rebuild both covering indexes in their own
+    // dirs: the meta signatures move, no stale slice or row is served
+    put("a", Seq(5L -> "apple pie", 6L -> "green apple tart",
+      7L -> "banana bread"))
+    for ((kind, build) <- Seq[(graft.api.IndexKind,
+        (Seq[String], String) => Unit)](
+        NgramKind -> (graft.index.NgramIndex.build(spark, _, "text", _)),
+        KeyKind -> (graft.index.KeyIndex.build(spark, _, "text", _)))) {
+      val Seq((p, _)) = lake.coverageByName(kind.name, "text")
+      build(graft.core.Lake.listFiles(dir), p)
+    }
+    assert(both() == (Seq(5L, 6L), Seq(5L)))
+    assert(jobs("lexical-reindex-rewarm") {
+      assert(both() == (Seq(5L, 6L), Seq(5L)))
+    } == 0)
+    // an appended file joins the next search: in-situ, then indexed
+    put("c", Seq(8L -> "apple pie", 9L -> "apple crumble"))
+    assert(both() == (Seq(5L, 6L, 8L, 9L), Seq(5L, 8L)))
+    assert(lake.index(NgramKind, "text").size == 1)
+    assert(lake.index(KeyKind, "text").size == 1)
+    assert(both() == (Seq(5L, 6L, 8L, 9L), Seq(5L, 8L)))
+  }
+
   test("token kind runs the facade lifecycle with sequence semantics") {
     val dir = TestSpark.tmpDir("apilake3")
     def write(name: String, rows: Seq[(Long, String)]): Unit = {

@@ -295,6 +295,123 @@ class JobCountSpec extends AnyFunSuite {
     assert(insitu == viaPlan(10) && insitu.exists(_._1 == 100L))
   }
 
+  /** 48 rows over 4 files, ONE covering index per (kind, column): the
+    * needle rows 1-3 and every `k<i>` key sit in a strict subset of the
+    * row groups, so the warm serving tier takes the lookups.
+    */
+  private def servedLake(name: String): (String, GraftLake) = {
+    val dir = TestSpark.tmpDir(name)
+    (1L to 48L).map { i =>
+      (i, s"k$i", Seq(s"t$i"),
+        s"row $i body ${if (i <= 3) "needle thread" else "plain filler"}")
+    }.toDF("doc_id", "sku", "tags", "text")
+      .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
+      .write.mode("overwrite").parquet(s"$dir/t")
+    val lake = GraftLake(spark, s"$dir/t")
+    for ((kind, column) <- Seq(NgramKind -> "text", KeyKind -> "sku",
+        FuzzyKind -> "text"))
+      assert(lake.index(kind, column).size == 1, s"want ONE ${kind.name} index")
+    (s"$dir/t", lake)
+  }
+
+  test("ngram and exact key facade searches and graft_search serve warm: ZERO jobs, Spark-plan rows") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.functions.{col, lower}
+    val (dir, lake) = servedLake("jobs-lexical-serve")
+    GraftExtensions.register(spark)
+    val bigK = GraftLake.SmartMaterializeMaxK + 1
+    def rows(df: DataFrame): (Seq[String], Seq[Row]) =
+      (df.columns.toSeq, df.collect().toSeq)
+    // the Spark plan's answer: the analytical-k search, truncated
+    def viaPlan(kind: IndexKind, column: String, q: String, k: Int,
+        order: Seq[String]) = {
+      val (cols, rs) = rows(lake.search(kind, column, q, bigK, order))
+      (cols, rs.take(k))
+    }
+    for ((kind, column, q) <- Seq((NgramKind, "text", "needle thread"),
+        (KeyKind, "sku", "k2")); viaSql <- Seq(false, true)) {
+      val name = (if (viaSql) "graft_search " else "") + kind.name
+      def run() =
+        if (!viaSql) rows(lake.search(kind, column, q, 2, Seq("doc_id")))
+        else rows(spark.sql(s"SELECT * FROM graft_search('$dir', " +
+          s"'${kind.name}', '$column', '$q', 2, 'doc_id')"))
+      val want = viaPlan(kind, column, q, 2, Seq("doc_id"))
+      assert(want._2.nonEmpty && !want._1.contains("uid"))
+      assert(run() == want, s"$name: cold rows differ from the Spark plan")
+      var warm = (Seq.empty[String], Seq.empty[Row])
+      val j = jobs(s"lexical-warm-$name") { warm = run() }
+      assert(warm == want, s"$name: warm rows differ from the Spark plan")
+      assert(j == 0, s"warm $name ran $j Spark jobs")
+    }
+    assert(rows(lake.search(NgramKind, "text", "needle thread", 2,
+      Seq("doc_id")))._2.map(_.getLong(0)) == Seq(1L, 2L))
+
+    // inputs that keep the Spark plan: a warm repeat still runs jobs,
+    // and the rows equal a plain filter over the lake's files
+    def brute(pred: Column, k: Int, order: String) =
+      rows(spark.read.parquet(lake.files: _*).filter(pred)
+        .orderBy(order).limit(k))
+    def onPlan(name: String, want: => (Seq[String], Seq[Row]))(
+        run: => DataFrame): Unit = {
+      rows(run)
+      var got = (Seq.empty[String], Seq.empty[Row])
+      val j = jobs(s"lexical-plan-$name") { got = rows(run) }
+      assert(j >= 1, s"$name must take the Spark plan")
+      assert(got == want, s"$name: rows differ from a plain filter")
+      assert(want._2.nonEmpty, s"$name: vacuous case")
+    }
+    val needle = lower(col("text")).contains("needle thread")
+    onPlan("prefix key", brute(col("sku").startsWith("k1"), 100, "doc_id")) {
+      lake.search(KeyKind, "sku", "k1%", 100, Seq("doc_id"))
+    }
+    onPlan("analytical k", brute(needle, bigK, "doc_id")) {
+      lake.search(NgramKind, "text", "needle thread", bigK, Seq("doc_id"))
+    }
+    onPlan("array order column", brute(needle, 2, "tags")) {
+      lake.search(NgramKind, "text", "needle thread", 2, Seq("tags"))
+    }
+    // an uncovered file: the in-situ part keeps the Spark plan
+    Seq((100L, "k100", Seq("t100"), "late needle thread"))
+      .toDF("doc_id", "sku", "tags", "text")
+      .coalesce(1).write.mode("append").parquet(dir)
+    for (stage <- Seq("in-situ", "two covering indexes")) {
+      onPlan(s"$stage ngram", brute(needle, 10, "doc_id")) {
+        lake.search(NgramKind, "text", "needle thread", 10, Seq("doc_id"))
+      }
+      onPlan(s"$stage key", brute(col("sku") === "k100", 10, "doc_id")) {
+        lake.search(KeyKind, "sku", "k100", 10, Seq("doc_id"))
+      }
+      // the late file becomes a second index group of each kind
+      if (stage == "in-situ")
+        for ((kind, column) <- Seq(NgramKind -> "text", KeyKind -> "sku"))
+          assert(lake.index(kind, column).size == 1)
+    }
+  }
+
+  test("warm-served and Spark-plan searches answer with the same columns") {
+    // k past SmartMaterializeMaxK forces the Spark plan on every route
+    val (_, lake) = servedLake("jobs-served-columns")
+    val bigK = GraftLake.SmartMaterializeMaxK + 1
+    val routes: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "ngram" -> (k => lake.search(NgramKind, "text", "needle thread", k)),
+      "key" -> (k => lake.search(KeyKind, "sku", "k2", k)),
+      "smart exact" -> (k => lake.smartSearch("text", "needle thread", k)),
+      "smart fuzzy fallback" -> (k => lake.smartSearch("text", "neadle thred", k)))
+    for ((name, run) <- routes) {
+      run(10).collect() // cold: fills the serving caches
+      var warm = Seq.empty[String]
+      val j = jobs(s"columns-warm-$name") {
+        val df = run(10)
+        assert(df.collect().nonEmpty, s"$name: no rows")
+        warm = df.columns.toSeq
+      }
+      assert(j == 0, s"$name: not warm-served ($j jobs)")
+      val plan = run(bigK)
+      assert(warm == plan.columns.toSeq,
+        s"$name: warm columns $warm, Spark-plan columns ${plan.columns.toSeq}")
+    }
+  }
+
   test("fm search jobs do not grow with covering-index count") {
     val small = mkLake("jobs-fm-2", 2, FmKind)
     val big = mkLake("jobs-fm-8", 8, FmKind)
