@@ -158,7 +158,7 @@ object ScaleBench {
           graft.index.NgramIndex.build(spark, docFiles, "text",
             idx("ngram"))
         }
-        graft.index.NgramIndex.searchRegex(spark, idx("ngram"), "text",
+        graft.api.NgramRegexKind.searchIndex(spark, idx("ngram"), "text",
           "fast [a-z]+ table").count()
       }),
       "bm25_phrase" -> (() => {
@@ -195,10 +195,8 @@ object ScaleBench {
           graft.index.NgramIndex.build(spark, docFiles, "text",
             idx("ngram"))
         }
-        import graft.index.BoolSearch._
-        graft.index.BoolSearch.search(spark, idx("ngram"), "text",
-          And(Seq(Or(Seq(Term("slow scan"), Term("fast scan"))),
-            Not(Term("window"))))).count()
+        graft.api.BoolNgramKind.searchIndex(spark, idx("ngram"), "text",
+          "(\"slow scan\" OR \"fast scan\") AND NOT window").count()
       }),
       // MG sketch: map-only bounded counters + one tiny merge groupBy;
       // wall time should track the token scan, not vocab size

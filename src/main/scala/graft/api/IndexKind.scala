@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   * hundreds of index groups must not pay hundreds of sequential Spark
   * jobs, so candidate postings are unioned tagged-by-index and the whole
   * search runs a constant number of jobs regardless of index-file count.
+  *
+  * Filter kinds whose index bounds the candidate row groups extend
+  * [[RowGroupKind]] and define only their probe and refine; ranking and
+  * vector kinds implement `searchLake` themselves.
   */
 trait IndexKind {
 
@@ -82,38 +86,6 @@ trait IndexKind {
     Layout.readPinned(spark, all).limit(0)
   }
 
-  /** The shared search tail of every filter kind: probe the covering
-    * indexes when any exist (`viaIndex` returning None = the cost
-    * switch chose brute), brute-refine the in-situ files, union — the
-    * both-empty case answered by ONE schema-stable empty frame.
-    * Extracted because eight hand-rolled copies of this block had
-    * already diverged once (a short-query early return that crashed on
-    * unindexed lakes); the guards live here exactly once.
-    */
-  protected def searchParts(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], covered: Seq[String],
-      viaIndex: () => Option[DataFrame],
-      refine: DataFrame => DataFrame): DataFrame = {
-    val parts =
-      (if (covered.isEmpty) Seq.empty
-       else Seq(viaIndex().getOrElse(
-         refine(Layout.readPinned(spark, covered))))) ++
-      (if (insituFiles.isEmpty) Seq.empty
-       else Seq(refine(Layout.readPinned(spark, insituFiles))))
-    if (parts.isEmpty) emptyLike(spark, paths, insituFiles)
-    else parts.reduce(_ unionByName _)
-  }
-
-  /** Uniform cost switch (reference: brute_force_threshold,
-    * backends/utils.py:221-225): too many hits, or EVERY covered row
-    * group hit (zero pruning value), → the brute scan beats a
-    * selective fetch.
-    */
-  protected def bruteBeatsIndex(spark: SparkSession, paths: Seq[String],
-      hits: Seq[(String, Long, Long, Long)]): Boolean =
-    hits.size > Lake.BruteForceThreshold ||
-      hits.size >= paths.map(metaRows(spark, _).size).sum
-
   /** Resolve probed `(idx, uid)` units ([[IndexKind.probe]]) to their
     * row-group hit list: a driver map lookup against the cached metas.
     */
@@ -132,8 +104,117 @@ trait IndexKind {
   }
 }
 
+/** One query's probe and refine over the covering indexes `paths` of a
+  * [[RowGroupKind]]: `units` names the candidate `(idx, uid)` row
+  * groups, idx being the ordinal in `paths` (None = the index cannot
+  * bound the query: scan); `refine` is the exact predicate over lake
+  * rows, fetched or scanned.
+  */
+private[graft] final case class Probe(
+    units: () => Option[Set[(Int, Long)]],
+    refine: DataFrame => DataFrame)
+
+/** A row-group filter kind: the index bounds WHICH row groups may hold a
+  * match and an exact refine decides which rows do — the reference's
+  * `search_index` + `brute_force` pair (backends/utils.py:215-282).
+  *
+  * The contract: a subclass defines only [[probe]]. The lifecycle
+  * around it is written here once — coverage, the candidate probe, the
+  * uniform cost switch (too many hits, or every covered row group hit,
+  * → scan), the fetch of hit row groups, the refine, the in-situ fill —
+  * for the facade ([[searchLake]]) and for one index dir
+  * ([[searchIndex]]) alike, so the two cannot answer differently.
+  */
+abstract class RowGroupKind extends IndexKind {
+
+  /** The probe and refine of `query` over the covering indexes `paths`.
+    * `insituFiles` only informs schema-dependent query forms (hex-mode
+    * keys on an unindexed lake). None when the query matches no row by
+    * definition (a token-less fuzzy query, a minhash query shorter than
+    * the shingle width): the result is empty, schema kept.
+    */
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String, query: String): Option[Probe]
+
+  /** Applied to every result, so empty ones share the normal schema. */
+  protected def shape(df: DataFrame): DataFrame = df
+
+  def searchLake(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String, query: String,
+      k: Int, live: Option[Set[String]] = None): DataFrame = {
+    // metadata-sized; empty without a job when paths is empty
+    val covered = coveredFiles(spark, paths, live)
+    var probed: Option[Long] = None
+    val res = probe(spark, paths, insituFiles, column, query) match {
+      case None => emptyLike(spark, paths, insituFiles)
+      case Some(p) =>
+        // every covering index probed in ONE tagged scan, ONE global
+        // cost switch over the whole lake's hit count
+        def viaIndex(): Option[DataFrame] = p.units().flatMap { us =>
+          val hits = collectHits(spark, paths, us, live)
+          if (bruteBeatsIndex(spark, paths, hits)) None
+          else {
+            probed = Some(hits.size.toLong)
+            Some(p.refine(Layout.readGroups(spark, hits, covered).drop("uid")))
+          }
+        }
+        // an empty live-restricted covered set (every indexed file
+        // removed, or a snapshot predating all indexed files) skips the
+        // indexed branch; in-situ files take the refine scan
+        val parts =
+          (if (covered.isEmpty) Seq.empty
+           else Seq(viaIndex().getOrElse(
+             p.refine(Layout.readPinned(spark, covered))))) ++
+          (if (insituFiles.isEmpty) Seq.empty
+           else Seq(p.refine(Layout.readPinned(spark, insituFiles))))
+        if (parts.isEmpty) emptyLike(spark, paths, insituFiles)
+        else parts.reduce(_ unionByName _)
+    }
+    // the driver-local emptiness signal is only valid when the index
+    // route decided the WHOLE plan (no in-situ part to scan)
+    IndexKind.lastProbe.set(if (insituFiles.isEmpty) probed else None)
+    shape(res)
+  }
+
+  /** Search one index dir: matching lake rows plus `uid` (-1 on the
+    * brute route, [[IndexKind.searchOne]]). No K-truncation: candidates
+    * are refined first (reference: src/lava/substring/search.rs:78-85).
+    */
+  def searchIndex(spark: SparkSession, path: String, column: String,
+      query: String): DataFrame =
+    searchOne(spark, path, probe(spark, Seq(path), Seq.empty, column, query))
+
+  protected def searchOne(spark: SparkSession, path: String,
+      planned: Option[Probe]): DataFrame =
+    shape(planned match {
+      case None => emptyLike(spark, Seq(path)).withColumn("uid", lit(-1L))
+      case Some(p) =>
+        IndexKind.searchOne(spark, path, p.units().map(_.map(_._2)), p.refine)
+    })
+
+  /** True when an unindexed lake's `column` is BinaryType: key and
+    * bloom queries then take the canonical hex form their builds use.
+    */
+  protected def binaryInsitu(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String): Boolean =
+    paths.isEmpty && insituFiles.nonEmpty &&
+      Layout.schemaOf(spark, insituFiles.head).fields.exists(f =>
+        f.name == column &&
+          f.dataType == org.apache.spark.sql.types.BinaryType)
+
+  /** Uniform cost switch (reference: brute_force_threshold,
+    * backends/utils.py:221-225): too many hits, or EVERY covered row
+    * group hit (zero pruning value), → the brute scan beats a
+    * selective fetch.
+    */
+  protected def bruteBeatsIndex(spark: SparkSession, paths: Seq[String],
+      hits: Seq[(String, Long, Long, Long)]): Boolean =
+    hits.size > Lake.BruteForceThreshold ||
+      hits.size >= paths.map(metaRows(spark, _).size).sum
+}
+
 object IndexKind {
-  /** Driver-local signal of the last NgramKind searchLake on this
+  /** Driver-local signal of the last [[RowGroupKind]] searchLake on this
     * thread: Some(hitRowGroups) when the index route decided the plan
     * over a fully-covered lake (then hits == 0 PROVES the refined
     * result is empty — the refine only filters candidate rows), None
@@ -305,8 +386,11 @@ object IndexKind {
   }
 }
 
-/** Character-ngram substring index kind (contains semantics). */
-object NgramKind extends IndexKind {
+/** The three query modes of the character-ngram index (contains,
+  * regex, boolean) share one index: name "ngram", one build and merge,
+  * so coverage, compaction and vacuum are shared too.
+  */
+abstract class NgramModeKind extends RowGroupKind {
 
   val name = "ngram"
 
@@ -316,141 +400,79 @@ object NgramKind extends IndexKind {
   def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
     NgramIndex.merge(spark, a, b, out)
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] =
+    Some(Probe(() => units(spark, paths, query), refine(column, query)))
+
+  /** Candidate units of `query` over the covering ngram indexes `paths`
+    * (None = the index cannot bound it) — shared with the SQL
+    * contains/rlike prune ([[graft.plans.IndexPruneRule]]).
+    */
+  private[graft] def units(spark: SparkSession, paths: Seq[String],
+      query: String): Option[Set[(Int, Long)]]
+
+  protected def refine(column: String, query: String): DataFrame => DataFrame
+}
+
+/** Character-ngram substring index kind (contains semantics). Queries
+  * shorter than the gram width probe their exact 1/2-gram; the empty
+  * query (contains("") = every non-NULL row) cannot be bounded.
+  */
+object NgramKind extends NgramModeKind {
+
+  private[graft] def units(spark: SparkSession, paths: Seq[String],
+      query: String): Option[Set[(Int, Long)]] = {
     val q = graft.text.Text.sparkLower(query)
-    // metadata-sized; empty without a job when paths is empty
-    val covered = coveredFiles(spark, paths, live)
-    var probedHits: Option[Long] = None
+    if (q.isEmpty) None
+    else Some(IndexKind.postingUnits(spark, paths, NgramIndex.queryGrams(q)))
+  }
 
-    def viaIndex(): Option[DataFrame] = {
-      if (q.isEmpty) return None // contains("") = every row: brute
-      // short queries probe their exact 1/2-gram (no scan cliff);
-      // grams are CODE-POINT windows to match the Spark-side build
-      val qgrams = {
-        val cpg = graft.text.Text.cpGrams(q, NgramIndex.N)
-        if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
-        else Seq(q)
-      }
-      // every covering index probed in ONE multi-path scan (a per-index
-      // read+union would pay a listing/schema job per index)
-      val hits = collectHits(spark, paths,
-        IndexKind.postingUnits(spark, paths, qgrams), live)
-      // ONE global cost switch over the whole lake's hit count
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else {
-        probedHits = Some(hits.size.toLong)
-        Some(
-          Layout.readGroups(spark, hits, covered).drop("uid")
-            .filter(lower(col(column)).contains(q)))
-      }
-    }
-
-    // an empty live-restricted covered set (every indexed file removed,
-    // or a snapshot predating all indexed files) must skip the indexed
-    // branch — brute([]) / readGroups' empty-schema path would throw;
-    // searchParts holds that guard for every filter kind
-    val res = searchParts(spark, paths, insituFiles, covered,
-      () => viaIndex(), d => d.filter(lower(col(column)).contains(q)))
-    // the driver-local emptiness signal is only valid when the index
-    // route decided the WHOLE plan (no in-situ part to scan)
-    IndexKind.lastProbe.set(if (insituFiles.isEmpty) probedHits else None)
-    res
+  protected def refine(column: String, query: String): DataFrame => DataFrame = {
+    val q = graft.text.Text.sparkLower(query)
+    _.filter(lower(col(column)).contains(q))
   }
 }
 
-/** Regex search over the SAME committed ngram indexes (name = "ngram":
-  * builds, coverage, compaction, vacuum are all shared with
-  * [[NgramKind]] — regex is a query MODE of the substring index, not a
-  * second index to maintain). The query string is a Java-regex pattern
-  * matched with contains semantics against `lower(column)`; the index
-  * is probed with the pattern's REQUIRED literal runs
+/** Regex mode of the ngram index. The query string is a Java-regex
+  * pattern matched with contains semantics against `lower(column)`;
+  * the index is probed with the pattern's REQUIRED literal runs
   * ([[graft.text.QueryShaping.requiredLiterals]]) and the exact rlike
   * refine runs only over candidate row groups. Patterns with no
   * required literal (top-level alternation, all-optional) take the
-  * scan-and-refine fallback; in-situ files always take the rlike scan.
+  * scan-and-refine fallback.
   */
-object NgramRegexKind extends IndexKind {
+object NgramRegexKind extends NgramModeKind {
 
-  val name = "ngram"
-
-  def build(spark: SparkSession, files: Seq[String], column: String,
-      path: String): Unit = NgramIndex.build(spark, files, column, path)
-
-  def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
-    NgramIndex.merge(spark, a, b, out)
-
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
-    val covered = coveredFiles(spark, paths, live)
+  private[graft] def units(spark: SparkSession, paths: Seq[String],
+      query: String): Option[Set[(Int, Long)]] = {
     val lits = graft.text.QueryShaping.requiredLiterals(query)
       .map(graft.text.Text.sparkLower).filter(_.nonEmpty)
-
-    def viaIndex(): Option[DataFrame] = {
-      if (lits.isEmpty) return None // nothing required: brute
-      // every literal's grams must all be present in a candidate row
-      // group (a matching row contains every literal); literals below
-      // the gram width probe their exact short gram
-      val qgrams = lits.flatMap { l =>
-        val cpg = graft.text.Text.cpGrams(l, NgramIndex.N)
-        if (cpg.nonEmpty) cpg else Seq(l)
-      }.distinct
-      val probeGrams = graft.text.QueryShaping.viableGrams(qgrams)
-      val hits = collectHits(spark, paths,
-        IndexKind.postingUnits(spark, paths, probeGrams), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(
-        Layout.readGroups(spark, hits, covered).drop("uid")
-          .filter(lower(col(column)).rlike(query)))
-    }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(),
-      d => d.filter(lower(col(column)).rlike(query)))
+    if (lits.isEmpty) None
+    else Some(IndexKind.postingUnits(spark, paths, NgramIndex.literalGrams(lits)))
   }
+
+  protected def refine(column: String, query: String): DataFrame => DataFrame =
+    _.filter(lower(col(column)).rlike(query))
 }
 
-/** Boolean-query mode of the SAME committed ngram indexes (name =
-  * "ngram", like [[NgramRegexKind]] — builds, coverage, compaction and
-  * vacuum are shared; boolean is a query MODE, not a second index).
-  * The query string is the [[graft.text.BoolQueryParser]] surface
-  * (`"fast scan" OR slow AND NOT vector`); candidates compose by the
-  * [[graft.index.BoolSearch]] set algebra over (idx, uid) pairs across
-  * every covering index, one selective read, one combined refine.
-  * In-situ files always take the full predicate scan.
+/** Boolean-query mode of the ngram index. The query string is the
+  * [[graft.text.BoolQueryParser]] surface (`"fast scan" OR slow AND
+  * NOT vector`); candidates compose by the [[graft.index.BoolSearch]]
+  * set algebra over (idx, uid) pairs, one selective read, one combined
+  * refine.
   */
-object BoolNgramKind extends IndexKind {
+object BoolNgramKind extends NgramModeKind {
 
-  val name = "ngram"
+  private[graft] def units(spark: SparkSession, paths: Seq[String],
+      query: String): Option[Set[(Int, Long)]] =
+    graft.index.BoolSearch.candUnits(spark, paths,
+      graft.text.BoolQueryParser.parse(query))
 
-  def build(spark: SparkSession, files: Seq[String], column: String,
-      path: String): Unit = NgramIndex.build(spark, files, column, path)
-
-  def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
-    NgramIndex.merge(spark, a, b, out)
-
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
-    import graft.index.BoolSearch
-    val tree = graft.text.BoolQueryParser.parse(query)
-    val covered = coveredFiles(spark, paths, live)
-    def refine(d: DataFrame): DataFrame =
-      d.filter(BoolSearch.predicate(column, tree))
-
-    def viaIndex(): Option[DataFrame] =
-      BoolSearch.candUnits(spark, paths, tree) match {
-        case None => None // unbounded tree: brute covered scan
-        case Some(set) =>
-          val hits = collectHits(spark, paths, set, live)
-          if (bruteBeatsIndex(spark, paths, hits)) None
-          else Some(refine(
-            Layout.readGroups(spark, hits, covered).drop("uid")))
-      }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(),
-      refine)
+  protected def refine(column: String, query: String): DataFrame => DataFrame = {
+    val pred = graft.index.BoolSearch.predicate(column,
+      graft.text.BoolQueryParser.parse(query))
+    _.filter(pred)
   }
 }
 
@@ -519,7 +541,7 @@ case class Bm25Kind(idCol: String,
   * query selects prefix mode (reference type "uuid" is exact;
   * prefix walk: src/lava/uuid/uuid.rs:106-162).
   */
-object KeyKind extends IndexKind {
+object KeyKind extends RowGroupKind {
 
   val name = "key"
 
@@ -529,10 +551,23 @@ object KeyKind extends IndexKind {
   def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
     KeyIndex.merge(spark, a, b, out)
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
-    val prefixMode = query.endsWith("%")
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] =
+    Some(keyProbe(spark, paths, insituFiles, column,
+      query.stripSuffix("%"), query.endsWith("%")))
+
+  /** Exact-mode lookup in one key index: a trailing `%` is part of the
+    * key here ([[KeyIndex.searchExact]]).
+    */
+  private[graft] def searchExact(spark: SparkSession, path: String,
+      column: String, key: String): DataFrame =
+    searchOne(spark, path,
+      Some(keyProbe(spark, Seq(path), Seq.empty, column, key, prefixMode = false)))
+
+  private def keyProbe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String, key0: String,
+      prefixMode: Boolean): Probe = {
     // the key table's own schema says whether this column was indexed
     // in canonical hex form (BinaryType source). Checked per PATH
     // footer: readTagged forces the first path's schema onto all of
@@ -543,41 +578,28 @@ object KeyKind extends IndexKind {
     // Cached per keys-dir signature so warm searches stay footer-free.
     val keyCols =
       paths.map(p => IndexKind.keyColCached(spark, p)).distinct
-    val mixedGenerations = keyCols.size > 1
     val keysAll =
-      if (paths.isEmpty || mixedGenerations) None
+      if (keyCols.size != 1) None
       else Some(IndexKind.readTagged(spark, paths, "keys"))
     val hexMode = keyCols.contains(KeyIndex.HexKeyCol) ||
-      (paths.isEmpty && insituFiles.nonEmpty &&
-        Layout.schemaOf(spark, insituFiles.head).fields.exists(f =>
-          f.name == column &&
-            f.dataType == org.apache.spark.sql.types.BinaryType))
+      binaryInsitu(spark, paths, insituFiles, column)
     val kc = if (hexMode) KeyIndex.HexKeyCol else "key"
-    val key0 = if (prefixMode) query.dropRight(1) else query
+    // a hex prefix may be ODD-length (half a byte): the hex string
+    // range still bounds it exactly
     val key = if (hexMode) key0.toUpperCase else key0
     def keyed: org.apache.spark.sql.Column =
       if (hexMode) hex(col(column)) else col(column)
-    def refine(d: DataFrame): DataFrame =
-      if (prefixMode) d.filter(keyed.startsWith(key))
-      else d.filter(keyed === key)
-    val covered = coveredFiles(spark, paths, live)
-
-    def viaIndex(): Option[DataFrame] = {
-      if (keysAll.isEmpty) return None // mixed generations: brute scan
-      val keys = keysAll.get
-        .select(col("idx"), col(kc).as("key"), col("uid"))
-      val ranged =
-        if (!prefixMode) keys.filter(col("key") === key)
-        else KeyIndex.prefixUpperBound(key) match {
-          case Some(hi) => keys.filter(col("key") >= key && col("key") < hi)
-          case None     => keys.filter(col("key") >= key)
-        }
-      val hits = collectHits(spark, paths, IndexKind.probe(ranged), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    // same empty-covered guard as NgramKind (ADVICE r2), via searchParts
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(), refine)
+    Probe(
+      () => keysAll.map { ks =>
+        val keys = ks.select(col("idx"), col(kc).as("key"), col("uid"))
+        IndexKind.probe(
+          if (!prefixMode) keys.filter(col("key") === key)
+          else KeyIndex.prefixUpperBound(key) match {
+            case Some(hi) => keys.filter(col("key") >= key && col("key") < hi)
+            case None     => keys.filter(col("key") >= key)
+          })
+      },
+      d => if (prefixMode) d.filter(keyed.startsWith(key))
+        else d.filter(keyed === key))
   }
 }

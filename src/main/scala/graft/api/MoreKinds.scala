@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * src/lava/logcloud/logcloud.rs:450-486). Postings are at uid
   * (row-group) granularity, like every other kind.
   */
-object LogCloudKind extends IndexKind {
+object LogCloudKind extends RowGroupKind {
 
   val name = "logcloud"
 
@@ -42,32 +42,23 @@ object LogCloudKind extends IndexKind {
       .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
   }
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
-    def refine(d: DataFrame): DataFrame =
-      d.filter(col(column).contains(query))
-    val covered = coveredFiles(spark, paths, live)
-
-    def viaIndex(): Option[DataFrame] = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] =
+    Some(Probe(
       // template/dictionary-text queries → brute-force signal (flag 0)
-      if (!LogCloudIndex.isVariableQuery(query)) return None
-      val cands = LogCloudIndex.varCandidatesMulti(spark, paths, query)
-        .select(col("idx"), col("line_id").as("uid"))
-      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(), refine)
-  }
+      () => if (!LogCloudIndex.isVariableQuery(query)) None
+        else Some(IndexKind.probe(
+          LogCloudIndex.varCandidatesMulti(spark, paths, query)
+            .select(col("idx"), col("line_id").as("uid")))),
+      _.filter(col(column).contains(query))))
 }
 
 /** Token-mode substring kind (token-sequence containment semantics,
   * reference token FM index). Same union-plan + cost-switch discipline
   * as NgramKind, with queries tokenized exactly like the corpus.
   */
-object TokenKind extends IndexKind {
+object TokenKind extends RowGroupKind {
 
   val name = "token"
 
@@ -77,32 +68,22 @@ object TokenKind extends IndexKind {
   def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
     TokenIndex.merge(spark, a, b, out)
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] = {
     val qtoks = TokenIndex.tokensOf(query)
     val qnorm = " " + qtoks.mkString(" ") + " "
     // token-less query = the empty token sequence = contained in every
     // NON-NULL row (TokenIndex/BwtDriver convention): refine must pass
     // those rows, not keep only token-less ones via the two-space
     // normal form. NULL rows are excluded like every contains-based
-    // path (SQL: NULL contains anything is NULL) — without the filter
-    // this kind would diverge from NgramKind and the oracles on
-    // corpora with NULL text
-    def refine(d: DataFrame): DataFrame =
-      if (qtoks.isEmpty) d.filter(col(column).isNotNull)
-      else d.filter(TokenIndex.normalForm(col(column)).contains(qnorm))
-    val covered = coveredFiles(spark, paths, live)
-
-    def viaIndex(): Option[DataFrame] = {
-      if (qtoks.isEmpty) return None
-      val hits = collectHits(spark, paths,
-        IndexKind.postingUnits(spark, paths, TokenIndex.queryGrams(qtoks)), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(), refine)
+    // path (SQL: NULL contains anything is NULL)
+    Some(Probe(
+      () => if (qtoks.isEmpty) None
+        else Some(IndexKind.postingUnits(spark, paths,
+          TokenIndex.queryGrams(qtoks))),
+      d => if (qtoks.isEmpty) d.filter(col(column).isNotNull)
+        else d.filter(TokenIndex.normalForm(col(column)).contains(qnorm))))
   }
 }
 
@@ -110,7 +91,7 @@ object TokenKind extends IndexKind {
   * overlapping row-group zones (reference virtual mode,
   * backends/utils.py:110-126).
   */
-object ZoneMapKind extends IndexKind {
+object ZoneMapKind extends RowGroupKind {
 
   val name = "zonemap"
 
@@ -126,32 +107,26 @@ object ZoneMapKind extends IndexKind {
     (parts(0).trim.toLong, parts(1).trim.toLong)
   }
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] = {
     val (lo, hi) = parseRange(query)
     // bounds in the column's own type: numeric pass-through, TIMESTAMP
     // columns read lo/hi as epoch micros, DATE as epoch days
-    def refine(d: DataFrame): DataFrame = {
-      val dt = d.schema(column).dataType
-      d.filter(col(column) >= ZoneMapIndex.boundExpr(dt, lo) &&
-        col(column) <= ZoneMapIndex.boundExpr(dt, hi))
-    }
-    val covered = coveredFiles(spark, paths, live)
-
-    def viaIndex(): Option[DataFrame] = {
-      val zones = IndexKind.readTagged(spark, paths, "zones")
-        .select(col("idx"), col("uid"), col("lo"), col("hi"))
-      val dt = zones.schema("lo").dataType
-      val cands = zones
-        .filter(col("hi") >= ZoneMapIndex.boundExpr(dt, lo) &&
-          col("lo") <= ZoneMapIndex.boundExpr(dt, hi)) // overlap test
-      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(), refine)
+    Some(Probe(
+      () => {
+        val zones = IndexKind.readTagged(spark, paths, "zones")
+          .select(col("idx"), col("uid"), col("lo"), col("hi"))
+        val dt = zones.schema("lo").dataType
+        Some(IndexKind.probe(zones
+          .filter(col("hi") >= ZoneMapIndex.boundExpr(dt, lo) &&
+            col("lo") <= ZoneMapIndex.boundExpr(dt, hi)))) // overlap test
+      },
+      d => {
+        val dt = d.schema(column).dataType
+        d.filter(col(column) >= ZoneMapIndex.boundExpr(dt, lo) &&
+          col(column) <= ZoneMapIndex.boundExpr(dt, hi))
+      }))
   }
 }
 
@@ -161,7 +136,7 @@ object ZoneMapKind extends IndexKind {
   * Bloom build is map-only over ingest order). Query = the value's
   * string form; exact refine keeps the false-positive discipline.
   */
-object BloomKind extends IndexKind {
+object BloomKind extends RowGroupKind {
 
   val name = "bloom"
 
@@ -172,9 +147,9 @@ object BloomKind extends IndexKind {
   def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
     graft.index.BloomIndex.merge(spark, a, b, out)
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] = {
     // BinaryType columns are hashed/probed/refined in canonical hex
     // form — the blooms table's own schema carries the marker
     // (footer-only check; uniform: one column has one type)
@@ -182,33 +157,16 @@ object BloomKind extends IndexKind {
       if (paths.isEmpty) None
       else Some(IndexKind.readTagged(spark, paths, "blooms"))
     val hexMode = bloomsAll.exists(graft.index.BloomIndex.isHexForm) ||
-      (paths.isEmpty && insituFiles.nonEmpty &&
-        Layout.schemaOf(spark, insituFiles.head).fields.exists(f =>
-          f.name == column &&
-            f.dataType == org.apache.spark.sql.types.BinaryType))
+      binaryInsitu(spark, paths, insituFiles, column)
     val q = if (hexMode) query.toUpperCase else query
-    def refine(d: DataFrame): DataFrame =
-      if (hexMode) d.filter(hex(col(column)) === q)
-      else d.filter(col(column).cast("string") === q)
-    val covered = coveredFiles(spark, paths, live)
-
-    def viaIndex(): Option[DataFrame] = {
-      val cands = bloomsAll.get
-        .filter(graft.index.BloomIndex.probe(q))
-      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(), refine)
+    Some(Probe(
+      () => bloomsAll.map(b =>
+        IndexKind.probe(b.filter(graft.index.BloomIndex.probe(q)))),
+      d => if (hexMode) d.filter(hex(col(column)) === q)
+        else d.filter(col(column).cast("string") === q)))
   }
 }
 
-/** Near-duplicate lookup kind: the query is a raw DOCUMENT TEXT and
-  * the result is every lake row whose shingle-Jaccard against it
-  * clears τ — dedup-at-ingest through the facade (banded MinHash
-  * postings prune, exact Jaccard verifies; graft.index.MinHashIndex).
-  */
 /** Typo-tolerant token kind (graft.index.FuzzyIndex): SymSpell
   * deletion-neighborhood probe over every covering index in one
   * tagged scan, per-token candidate intersection at row-group
@@ -216,7 +174,7 @@ object BloomKind extends IndexKind {
   * [[graft.index.FuzzyIndex.refinePredicate]] — shared with the
   * standalone index so facade and direct paths cannot diverge.
   */
-object FuzzyKind extends IndexKind {
+object FuzzyKind extends RowGroupKind {
 
   val name = "fuzzy"
 
@@ -227,31 +185,25 @@ object FuzzyKind extends IndexKind {
   def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
     graft.index.FuzzyIndex.merge(spark, a, b, out)
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] = {
     import graft.index.FuzzyIndex
     val qtoks = graft.text.Text.RegexTokenizer.tokenizeQuery(query)
-    val covered = coveredFiles(spark, paths, live)
     // an empty token stream defines no fuzzy predicate: defined empty
     // result, the MinHashKind short-query convention
-    if (qtoks.isEmpty) return emptyLike(spark, paths, insituFiles)
-    def refine(d: DataFrame): DataFrame =
-      d.filter(FuzzyIndex.refinePredicate(column, qtoks))
-
-    def viaIndex(): Option[DataFrame] = {
-      val hits = collectHits(spark, paths,
-        FuzzyIndex.candUnits(spark, paths, qtoks), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(),
-      refine)
+    if (qtoks.isEmpty) None
+    else Some(Probe(() => Some(FuzzyIndex.candUnits(spark, paths, qtoks)),
+      _.filter(FuzzyIndex.refinePredicate(column, qtoks))))
   }
 }
 
-object MinHashKind extends IndexKind {
+/** Near-duplicate lookup kind: the query is a raw DOCUMENT TEXT and
+  * the result is every lake row whose shingle-Jaccard against it
+  * clears τ — dedup-at-ingest through the facade (banded MinHash
+  * postings prune, exact Jaccard verifies; graft.index.MinHashIndex).
+  */
+object MinHashKind extends RowGroupKind {
 
   val name = "minhash"
 
@@ -262,41 +214,27 @@ object MinHashKind extends IndexKind {
   def merge(spark: SparkSession, a: String, b: String, out: String): Unit =
     graft.index.MinHashIndex.merge(spark, a, b, out)
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
-    def refine(d: DataFrame): DataFrame =
-      graft.index.MinHashIndex.verifyJaccard(d, column, query)
-    val covered = coveredFiles(spark, paths, live)
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] = {
     val keys = graft.index.MinHashIndex.bandKeysOf(query)
     // a query shorter than ShingleK tokens has no shingles, hence no
-    // signature and (by definition) no near-duplicates — return empty
-    // instead of falling through to verifyJaccard's nonEmpty require.
-    // Schema falls back to the in-situ files (an UNINDEXED lake has no
-    // covered files to derive it from), and carries the `jac` column
-    // every non-empty result has — downstream selects must not fail
-    // only on short queries
-    if (keys.isEmpty)
-      return emptyLike(spark, paths, insituFiles)
-        .withColumn("jac", lit(0.0))
-
-    def viaIndex(): Option[DataFrame] = {
-      val cands = IndexKind.readTagged(spark, paths, "postings")
-        .filter(keys.map { case (b, kk) =>
-          col("band") === b && col("bkey") === kk
-        }.reduce(_ || _))
-      val hits = collectHits(spark, paths, IndexKind.probe(cands), live)
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(refine(Layout.readGroups(spark, hits, covered).drop("uid")))
-    }
-
-    // every non-empty result carries refine's `jac` column; give the
-    // both-empty frame the same schema so downstream selects never
-    // fail only on empty results
-    val res = searchParts(spark, paths, insituFiles, covered,
-      () => viaIndex(), refine)
-    if (res.columns.contains("jac")) res else res.withColumn("jac", lit(0.0))
+    // signature and (by definition) no near-duplicates
+    if (keys.isEmpty) None
+    else Some(Probe(
+      () => Some(IndexKind.probe(
+        IndexKind.readTagged(spark, paths, "postings")
+          .filter(keys.map { case (b, kk) =>
+            col("band") === b && col("bkey") === kk
+          }.reduce(_ || _)))),
+      graft.index.MinHashIndex.verifyJaccard(_, column, query)))
   }
+
+  // every non-empty result carries the refine's `jac` column; empty
+  // ones get the same schema so downstream selects never fail only on
+  // empty results
+  override protected def shape(df: DataFrame): DataFrame =
+    if (df.columns.contains("jac")) df else df.withColumn("jac", lit(0.0))
 }
 
 /** ANN kind over an embedding column. The query is the vector itself
@@ -563,7 +501,7 @@ case class VamanaKind(idCol: String, l: Int = Int.MaxValue,
   * (and of the driver machinery behind it, [[graft.index.BwtDriver]]),
   * so they cannot drift apart semantically.
   */
-abstract class BwtKind(driver: graft.index.BwtDriver) extends IndexKind {
+abstract class BwtKind(driver: graft.index.BwtDriver) extends RowGroupKind {
 
   def build(spark: SparkSession, files: Seq[String], column: String,
       path: String): Unit = driver.build(spark, files, column, path)
@@ -584,60 +522,55 @@ abstract class BwtKind(driver: graft.index.BwtDriver) extends IndexKind {
   /** False when the query has no walkable symbols (always brute). */
   protected def indexable(q: String): Boolean = driver.symbols(q).nonEmpty
 
-  def searchLake(spark: SparkSession, paths: Seq[String],
-      insituFiles: Seq[String], column: String, query: String,
-      k: Int, live: Option[Set[String]] = None): DataFrame = {
+  protected def probe(spark: SparkSession, paths: Seq[String],
+      insituFiles: Seq[String], column: String,
+      query: String): Option[Probe] = {
     val q = graft.text.Text.sparkLower(query)
-    val covered = coveredFiles(spark, paths, live)
-
-    def viaIndex(): Option[DataFrame] = {
-      if (!indexable(q)) return None // no walkable symbols: brute
-      // one version map for the whole operation: walk, fetch, and slice
-      // must all see the same build of every index
-      val vers = driver.versionsOf(spark, paths)
-      // skip-sampled indexes (token-mode sample_factor builds) cannot
-      // join the full-pattern lock-step walk — their BWT is the THINNED
-      // stream, so the full query would silently match nothing. They
-      // resolve per-path through the driver's residue-union candidates.
-      val (plain, sampled) = paths.partition(p =>
-        driver.sampleFactor(spark, p) == 1)
-      val ranges = driver.saRangeMulti(spark, plain, q, vers)
-      // cost switch on total SA-range width (positions, so scaled by
-      // chunk size relative to the row-group hit threshold)
-      val width = ranges.values.map { case (lo, hi) => math.max(hi - lo, 0L) }.sum
-      if (width > Lake.BruteForceThreshold.toLong * driver.ChunkSize) return None
-      driver.fetchPostings(spark, ranges, vers) // one batched job
-      // capped slices: a single over-threshold index alone decides brute
-      // without the driver ever materializing an unbounded uid list
-      val slices = plain.map { p =>
-        val (lo, hi) = ranges(p)
-        driver.postingSliceCapped(spark, p, lo, hi, Lake.BruteForceThreshold,
-          Some(vers(p)))
-      } ++ sampled.map { p =>
-        driver.candidateUids(spark, p, q, Lake.BruteForceThreshold, vers(p))
-      }
-      val paths0 = plain ++ sampled
-      if (slices.exists(_.isEmpty)) return None
-      val byPath = paths0.map(p => p -> metaRows(spark, p)
-        .map(r => r._1 -> (r._2, r._3, r._4)).toMap).toMap
-      val hits = paths0.zip(slices).flatMap { case (p, Some(uids)) =>
-        uids.flatMap(uid =>
-          byPath(p).get(uid).map { case (f, rs, n) => (f, uid, rs, n) })
-      case _ => Nil
-      }.distinct.filter(h => live.forall(_.contains(h._1)))
-      if (bruteBeatsIndex(spark, paths, hits)) None
-      else Some(
-        Layout.readGroups(spark, hits, covered).drop("uid")
-          .filter(refinePred(column, q)))
-    }
-
     // symbol-less query = empty pattern = contained in every NON-NULL
     // row (the BwtDriver convention): token-mode's refinePred would
     // otherwise keep only token-less ROWS via the two-space normal
     // form. NULLs excluded, matching every contains-based path
-    searchParts(spark, paths, insituFiles, covered, () => viaIndex(),
-      d => if (!indexable(q)) d.filter(col(column).isNotNull)
-        else d.filter(refinePred(column, q)))
+    if (!indexable(q))
+      Some(Probe(() => None, _.filter(col(column).isNotNull)))
+    else Some(Probe(() => units(spark, paths, q),
+      _.filter(refinePred(column, q))))
+  }
+
+  /** Candidate units of the walkable query `q`, None when a width cap
+    * says scan.
+    */
+  private def units(spark: SparkSession, paths: Seq[String],
+      q: String): Option[Set[(Int, Long)]] = {
+    // one version map for the whole operation: walk, fetch, and slice
+    // must all see the same build of every index
+    val vers = driver.versionsOf(spark, paths)
+    // skip-sampled indexes (token-mode sample_factor builds) cannot
+    // join the full-pattern lock-step walk — their BWT is the THINNED
+    // stream, so the full query would silently match nothing. They
+    // resolve per-path through the driver's residue-union candidates.
+    val (plain, sampled) = paths.partition(p =>
+      driver.sampleFactor(spark, p) == 1)
+    val ranges = driver.saRangeMulti(spark, plain, q, vers)
+    // cost switch on total SA-range width (positions, so scaled by
+    // chunk size relative to the row-group hit threshold)
+    val width = ranges.values.map { case (lo, hi) => math.max(hi - lo, 0L) }.sum
+    if (width > Lake.BruteForceThreshold.toLong * driver.ChunkSize) return None
+    driver.fetchPostings(spark, ranges, vers) // one batched job
+    // capped slices: a single over-threshold index alone decides brute
+    // without the driver ever materializing an unbounded uid list
+    val slices = plain.map { p =>
+      val (lo, hi) = ranges(p)
+      driver.postingSliceCapped(spark, p, lo, hi, Lake.BruteForceThreshold,
+        Some(vers(p)))
+    } ++ sampled.map { p =>
+      driver.candidateUids(spark, p, q, Lake.BruteForceThreshold, vers(p))
+    }
+    if (slices.exists(_.isEmpty)) None
+    else {
+      val idx = paths.zipWithIndex.toMap
+      Some((plain ++ sampled).zip(slices.flatten)
+        .flatMap { case (p, uids) => uids.map(idx(p) -> _) }.toSet)
+    }
   }
 }
 

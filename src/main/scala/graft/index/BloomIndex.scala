@@ -141,21 +141,6 @@ object BloomIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
   }
 
-  /** Equality search: bloom-probe → candidate units → selective read →
-    * exact refine (false positives die here).
-    */
-  def search(spark: SparkSession, path: String, column: String,
-      value: String): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val blooms = spark.read.parquet(s"$path/blooms")
-    val hexMode = isHexForm(blooms)
-    val v = if (hexMode) value.toUpperCase else value
-    val hits = blooms.filter(probe(v)).select("uid")
-    val rows = Layout.readHits(spark, meta, hits)
-    if (hexMode) rows.filter(hex(col(column)) === v)
-    else rows.filter(col(column).cast("string") === v)
-  }
-
   /** Candidate uids for `value` — exposed for pruning-effect tests. */
   def candidateUids(spark: SparkSession, path: String,
       value: String): Seq[Long] = {

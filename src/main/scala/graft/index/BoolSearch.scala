@@ -88,18 +88,6 @@ object BoolSearch {
     case Not(c)  => termsOf(c)
   }
 
-  /** The grams one lowercased term must intersect (short terms probe
-    * their exact 1/2-gram; empty terms have no bound → None).
-    */
-  def gramsOf(q: String): Option[Seq[String]] =
-    if (q.isEmpty) None
-    else {
-      val cpg = graft.text.Text.cpGrams(q, NgramIndex.N)
-      Some(
-        if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
-        else Seq(q))
-    }
-
   /** Candidate units `(idx, uid)` of the tree over the covering ngram
     * indexes `paths` (None = unbounded): ONE probe job for every
     * distinct gram of every term ([[graft.api.IndexKind.postingTerms]] —
@@ -109,8 +97,10 @@ object BoolSearch {
   private[graft] def candUnits(spark: SparkSession, paths: Seq[String],
       query: Bq): Option[Set[(Int, Long)]] = {
     import graft.api.IndexKind
+    // short terms probe their exact 1/2-gram; empty terms have no bound
     val termGrams: Map[String, Seq[String]] =
-      termsOf(query).toSeq.flatMap(t => gramsOf(t).map(t -> _)).toMap
+      termsOf(query).toSeq.filter(_.nonEmpty)
+        .map(t => t -> NgramIndex.queryGrams(t)).toMap
     val allGrams = termGrams.values.flatten.toSeq.distinct
     val held: Map[(Int, Long), Set[Int]] =
       if (allGrams.isEmpty) Map.empty
@@ -124,14 +114,4 @@ object BoolSearch {
       })
     })
   }
-
-  /** Search one gram index with a boolean tree: the one-job term probe
-    * ([[candUnits]]), set algebra, ONE selective read, combined refine.
-    * Returns matching lake rows (all columns + uid).
-    */
-  def search(spark: SparkSession, path: String, column: String,
-      query: Bq): DataFrame =
-    graft.api.IndexKind.searchOne(spark, path,
-      candUnits(spark, Seq(path), query).map(_.map(_._2)),
-      _.filter(predicate(column, query)))
 }

@@ -138,22 +138,13 @@ object FuzzyIndex {
       qtoks.size)
   }
 
-  /** Search one index: probe each query token's deletion neighborhood,
-    * intersect per-token candidate row groups (a matching row holds a
-    * near-token for every query token), selective read, levenshtein
-    * refine. Returns matching lake rows (all columns + uid); no
-    * K-truncation before refine. A token-less query defines no fuzzy
-    * predicate: the defined empty result, schema preserved.
+  /** Fuzzy search of one index ([[graft.api.FuzzyKind]]): matching lake
+    * rows plus `uid`; a token-less query defines no fuzzy predicate and
+    * answers empty.
     */
   def search(spark: SparkSession, path: String, column: String,
-      query: String): DataFrame = {
-    val qtoks = Text.RegexTokenizer.tokenizeQuery(query)
-    val cands =
-      if (qtoks.isEmpty) Set.empty[Long]
-      else candUnits(spark, Seq(path), qtoks).map(_._2)
-    graft.api.IndexKind.searchOne(spark, path, Some(cands),
-      d => if (qtoks.isEmpty) d else d.filter(refinePredicate(column, qtoks)))
-  }
+      query: String): DataFrame =
+    graft.api.FuzzyKind.searchIndex(spark, path, column, query)
 
   /** Merge two indexes (compaction): union with the second side's uids
     * re-based past the first's — parquet-table indexes reduce the

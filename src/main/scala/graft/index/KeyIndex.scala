@@ -52,24 +52,13 @@ object KeyIndex {
     meta.unpersist()
   }
 
-  /** Exact-match lookup → matching lake rows (all columns + uid). A
-    * `key_hex` index (BinaryType column) is probed with the key's hex
-    * form, case-normalized; the refine compares `hex(column)`.
+  /** Exact-match lookup in one index → matching lake rows plus `uid`
+    * ([[graft.api.KeyKind]]). A `key_hex` index (BinaryType column) is
+    * probed with the key's hex form, case-normalized.
     */
   def searchExact(spark: SparkSession, path: String, column: String,
-      key: String): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val keys = spark.read.parquet(s"$path/keys")
-    val kc = keyColOf(keys.columns.toSeq)
-    val hexMode = kc == HexKeyCol
-    val probe = if (hexMode) key.toUpperCase else key
-    val hits = keys
-      .filter(col(kc) === probe) // pushed filter → row-group pruning
-      .select("uid").distinct()
-    val rows = Layout.readHits(spark, meta, hits)
-    if (hexMode) rows.filter(hex(col(column)) === probe) // FP discipline
-    else rows.filter(col(column) === probe)
-  }
+      key: String): DataFrame =
+    graft.api.KeyKind.searchExact(spark, path, column, key)
 
   /** Merge two key indexes: union + global re-sort (the reference
     * merges tries recursively with uid offsets, reference:
@@ -111,29 +100,5 @@ object KeyIndex {
     if (c < '퟿' || ('' <= c && c < '￿'))
       Some(prefix.init + (c + 1).toChar)
     else None
-  }
-
-  /** Prefix lookup: range predicate [prefix, nextPrefix) — both bounds
-    * are pushed to parquet and prune row groups of the sorted key table.
-    */
-  def searchPrefix(spark: SparkSession, path: String, column: String,
-      prefix: String): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val keys = spark.read.parquet(s"$path/keys")
-    val kc = keyColOf(keys.columns.toSeq)
-    val hexMode = kc == HexKeyCol
-    // a hex prefix may be ODD-length (half a byte) — the hex string
-    // range still bounds it exactly, one more reason the hex FORM is
-    // the indexed key rather than the raw bytes
-    val p = if (hexMode) prefix.toUpperCase else prefix
-    val ranged = keys.filter(col(kc) >= p)
-    val bounded = prefixUpperBound(p) match {
-      case Some(hi) => ranged.filter(col(kc) < hi)
-      case None     => ranged // mandatory refine still restores exactness
-    }
-    val hits = bounded.select("uid").distinct()
-    val rows = Layout.readHits(spark, meta, hits)
-    if (hexMode) rows.filter(hex(col(column)).startsWith(p))
-    else rows.filter(col(column).startsWith(p))
   }
 }

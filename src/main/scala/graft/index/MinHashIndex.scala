@@ -158,33 +158,4 @@ object MinHashIndex {
       .filter(keep(col("jac") >= Tau))
       .drop("__toks", "__sh", "__inter")
   }
-
-  /** Near-dup lookup: band-key point probes → candidate row groups →
-    * selective read → exact Jaccard ≥ τ.
-    */
-  def search(spark: SparkSession, path: String, column: String,
-      queryText: String): DataFrame = {
-    val keys = bandKeysOf(queryText)
-    val meta = spark.read.parquet(s"$path/meta")
-    // a query shorter than K tokens has no shingles, hence no signature
-    // and by definition no near-duplicates: the correct result is an
-    // EMPTY frame with the normal result schema (lake rows + jac), not
-    // an empty.reduceLeft crash — the facade (MinHashKind) guards this
-    // the same way
-    if (keys.isEmpty) {
-      // schema only: ONE covered file suffices for the zero-row frame
-      // (listing every covered file here costs a whole-group listing
-      // job just to derive column names)
-      val one = meta.select("file_path").limit(1)
-        .collect().map(_.getString(0)).toSeq
-      return spark.read.parquet(one: _*).limit(0)
-        .withColumn("uid", lit(-1L)).withColumn("jac", lit(0.0))
-    }
-    val hits = spark.read.parquet(s"$path/postings")
-      .filter(keys.map { case (b, k) =>
-        col("band") === b && col("bkey") === k
-      }.reduce(_ || _))
-      .select("uid")
-    verifyJaccard(Layout.readHits(spark, meta, hits), column, queryText)
-  }
 }

@@ -75,70 +75,35 @@ object NgramIndex {
     meta.unpersist()
   }
 
-  /** Search one index: gram-intersect → candidate row groups → selective
-    * read → refine. Returns the matching lake rows (all columns + uid).
-    * No K-truncation here: FP-prone candidates are refined first
-    * (reference: search.rs:78-85).
+  /** The grams a lowercased, non-empty contains query probes: its
+    * code-point windows (the index's grams are Spark-side code-point
+    * windows, Text.cpGrams), capped on long queries (the candidate
+    * superset stays valid; refine restores exactness — reference:
+    * token_viable_limit, src/lava/substring/search.rs:512-524). Queries
+    * shorter than the gram width probe their exact short gram.
     */
-  def search(spark: SparkSession, path: String, column: String,
-      query: String): DataFrame = {
-    val q = graft.text.Text.sparkLower(query)
-    // contains("") is every row: no gram to probe, scan covered files
-    if (q.isEmpty) return graft.api.IndexKind.searchOne(spark, path, None, d => d)
-    // cap probe width on long queries (candidate superset stays valid;
-    // refine restores exactness) — reference: token_viable_limit,
-    // src/lava/substring/search.rs:512-524. Queries shorter than the
-    // gram width probe their exact short gram instead of scanning.
-    // code-point grams: the index's grams are Spark-side code-point
-    // windows, so the query must window the same way (Text.cpGrams)
-    val qgrams = {
-      val cpg = graft.text.Text.cpGrams(q, N)
-      if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
-      else Seq(q)
-    }
-    // candidate uids are row-group ordinals — metadata-sized by
-    // definition — so one probe job feeds the cost switch (reference:
-    // brute_force_threshold=1000, backends/utils.py:221-225)
-    graft.api.IndexKind.searchOne(spark, path,
-      Some(graft.api.IndexKind.postingUnits(spark, Seq(path), qgrams).map(_._2)),
-      _.filter(lower(col(column)).contains(q)))
+  def queryGrams(q: String): Seq[String] = {
+    val cpg = Text.cpGrams(q, N)
+    if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
+    else Seq(q)
   }
 
-  /** Regex search against the same postings: probe the index for the
-    * pattern's REQUIRED literal runs
-    * ([[graft.text.QueryShaping.requiredLiterals]]), intersect their
-    * grams, regex-refine only the candidate row groups. This is the
-    * log-grep accelerant the LogCloud tier applies to templates,
-    * generalized to any indexed column: at 100 TB a regex that contains
-    * any 3-char literal reads only the row groups holding ALL its
-    * literals' grams instead of scanning the lake.
-    *
-    * `pattern` is matched against `lower(column)` (the postings are
-    * lowercased grams), Java-regex contains semantics — callers pass
-    * lowercase literals. Patterns with no required literal (top-level
-    * alternation, all-optional) take the documented scan-and-refine
-    * fallback: the index cannot bound them, exactness never depends on
-    * it.
+  /** The grams a set of required literals probes (a regex's literal
+    * runs): every literal's windows, short literals as their exact
+    * gram, one capped distinct set carrying the conjunction.
     */
-  def searchRegex(spark: SparkSession, path: String, column: String,
-      pattern: String): DataFrame = {
-    val lits = graft.text.QueryShaping.requiredLiterals(pattern)
-      .map(graft.text.Text.sparkLower).filter(_.nonEmpty)
-    // every literal's grams must ALL be present in a candidate row
-    // group (a matching row contains every literal, so its group's gram
-    // set is a superset of every literal's grams); literals shorter
-    // than the gram width probe their exact short gram — one flat
-    // distinct gram set carries the conjunction
-    val cands =
-      if (lits.isEmpty) None
-      else Some(graft.api.IndexKind.postingUnits(spark, Seq(path),
-        graft.text.QueryShaping.viableGrams(lits.flatMap { l =>
-          val cpg = graft.text.Text.cpGrams(l, N)
-          if (cpg.nonEmpty) cpg else Seq(l)
-        }.distinct)).map(_._2))
-    graft.api.IndexKind.searchOne(spark, path, cands,
-      _.filter(lower(col(column)).rlike(pattern)))
-  }
+  def literalGrams(lits: Seq[String]): Seq[String] =
+    graft.text.QueryShaping.viableGrams(lits.flatMap { l =>
+      val cpg = Text.cpGrams(l, N)
+      if (cpg.nonEmpty) cpg else Seq(l)
+    }.distinct)
+
+  /** Contains search of one index ([[graft.api.NgramKind]]): matching
+    * lake rows plus `uid`.
+    */
+  def search(spark: SparkSession, path: String, column: String,
+      query: String): DataFrame =
+    graft.api.NgramKind.searchIndex(spark, path, column, query)
 
   /** Merge two indexes into one (compaction): second index's uids are
     * re-based past the first's (reference: merge re-bases uid offsets,

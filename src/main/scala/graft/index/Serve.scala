@@ -323,11 +323,7 @@ object Serve {
     if (totalRows(spark, path) > MaxServeRows) return None
     val q = Text.sparkLower(query)
     if (q.isEmpty) return None
-    val qgrams = {
-      val cpg = Text.cpGrams(q, NgramIndex.N)
-      if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
-      else Seq(q)
-    }
+    val qgrams = NgramIndex.queryGrams(q)
     val slices = gramSlices(spark, path, qgrams)
     val cands = qgrams.map(g => slices(g).toSet).reduce(_ intersect _)
       .toSeq.sorted

@@ -71,27 +71,6 @@ object TokenIndex {
     if (qtoks.size >= 2) qtoks.sliding(2).map(_.mkString(" ")).toSeq.distinct
     else qtoks
 
-  /** Token-sequence search with the uniform brute-force cost switch. */
-  def search(spark: SparkSession, path: String, column: String,
-      query: String): DataFrame = {
-    val qtoks = tokensOf(query)
-    val qnorm = " " + qtoks.mkString(" ") + " "
-    // a token-less query ("!!!") is the EMPTY token sequence — a
-    // sub-sequence of every NON-NULL row, so every covered non-null
-    // row matches (the BwtDriver/TokenFmIndex convention; refining
-    // with the two-space normal form would instead keep only
-    // token-less ROWS). NULLs excluded like every contains-based path
-    if (qtoks.isEmpty)
-      return graft.api.IndexKind.searchOne(spark, path, None,
-        _.filter(col(column).isNotNull))
-    // same global cost switch as every other kind (reference:
-    // brute_force_threshold, backends/utils.py:221-225)
-    graft.api.IndexKind.searchOne(spark, path,
-      Some(graft.api.IndexKind.postingUnits(spark, Seq(path),
-        queryGrams(qtoks)).map(_._2)),
-      _.filter(normalForm(col(column)).contains(qnorm)))
-  }
-
   /** Merge two token indexes (reference merge mode 1,
     * src/lava/merge.rs:17-205): postings union with `b`'s uids re-based
     * past `a`'s — the same uid-offset protocol as every other kind.

@@ -99,21 +99,4 @@ object ZoneMapIndex {
       date_from_unix_date(lit(v).cast("int"))
     case _ => lit(v)
   }
-
-  /** Range query [lo, hi]: prune to overlapping zones, selective read,
-    * refine. For TIMESTAMP/DATE columns the bounds are epoch
-    * micros/days.
-    */
-  def searchRange(spark: SparkSession, path: String, column: String,
-      lo: Long, hi: Long): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val zones = spark.read.parquet(s"$path/zones")
-    val dt = zones.schema("lo").dataType
-    val (loE, hiE) = (boundExpr(dt, lo), boundExpr(dt, hi))
-    val hits = zones
-      .filter(col("hi") >= loE && col("lo") <= hiE) // overlap test
-      .select("uid")
-    Layout.readHits(spark, meta, hits)
-      .filter(col(column) >= loE && col(column) <= hiE)
-  }
 }

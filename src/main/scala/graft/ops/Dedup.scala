@@ -564,7 +564,7 @@ object Dedup {
       graft.core.IndexStore.ensure(p) {
         graft.index.MinHashIndex.build(s, files, "text", p)
       }
-      graft.index.MinHashIndex.search(s, p, "text", lookupQueryText(s, dir))
+      graft.api.MinHashKind.searchIndex(s, p, "text", lookupQueryText(s, dir))
         .select(col("doc_id"), col("jac")).orderBy(col("doc_id"))
     }, minhashLookupSql),
 
@@ -586,7 +586,7 @@ object Dedup {
             s, graft.core.Lake.listFiles(lake), "text", p)
         }
       }
-      graft.index.MinHashIndex.search(s, p, "text", lookupQueryText(s, dir))
+      graft.api.MinHashKind.searchIndex(s, p, "text", lookupQueryText(s, dir))
         .select(col("doc_id"), col("jac")).orderBy(col("doc_id"))
     }, minhashLookupSql)
   )

@@ -105,6 +105,16 @@ object IndexQueries {
   val RegexGroupStr = "(slow|fast) scan" // group skipped; literal " scan"
   val RegexAltStr = "slow|fast" // top-level alternation: no literal
 
+  /** A boolean query ([[graft.text.BoolQueryParser]] surface) over the
+    * full gram index, with its oracle.
+    */
+  private def boolQ(q: String): Q = Q((s, dir) =>
+    graft.api.BoolNgramKind.searchIndex(s, fullIdx(s, dir), Column, q)
+      .select(col("doc_id")).orderBy(col("doc_id")),
+    "SELECT doc_id FROM documents WHERE " +
+      graft.index.BoolSearch.oraclePredicate("text",
+        graft.text.BoolQueryParser.parse(q)) + " ORDER BY doc_id")
+
   private def regexSql(pat: String) =
     s"SELECT doc_id FROM documents WHERE regexp_matches(lower(text), '$pat') ORDER BY doc_id"
 
@@ -253,7 +263,7 @@ object IndexQueries {
     // generalized to any indexed column
     "substring_search_regex" -> Q((s, dir) => {
       val p = fullIdx(s, dir)
-      NgramIndex.searchRegex(s, p, Column, RegexQueryStr)
+      graft.api.NgramRegexKind.searchIndex(s, p, Column, RegexQueryStr)
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, regexSql(RegexQueryStr)),
 
@@ -262,7 +272,7 @@ object IndexQueries {
     // outside it (" scan")
     "substring_search_regex_group" -> Q((s, dir) => {
       val p = fullIdx(s, dir)
-      NgramIndex.searchRegex(s, p, Column, RegexGroupStr)
+      graft.api.NgramRegexKind.searchIndex(s, p, Column, RegexGroupStr)
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, regexSql(RegexGroupStr)),
 
@@ -271,7 +281,7 @@ object IndexQueries {
     // exactness independent of pruning
     "substring_search_regex_alt" -> Q((s, dir) => {
       val p = fullIdx(s, dir)
-      NgramIndex.searchRegex(s, p, Column, RegexAltStr)
+      graft.api.NgramRegexKind.searchIndex(s, p, Column, RegexAltStr)
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, regexSql(RegexAltStr)),
 
@@ -279,47 +289,16 @@ object IndexQueries {
     // algebra at row-group granularity (And=∩, Or=∪, Not=universe —
     // pruning survives through And-siblings), one selective read, one
     // combined refine (graft.index.BoolSearch)
-    "substring_search_bool_or" -> Q((s, dir) => {
-      import graft.index.BoolSearch._
-      val p = fullIdx(s, dir)
-      val q = Or(Seq(Term("slow scan"), Term("fast scan")))
-      graft.index.BoolSearch.search(s, p, Column, q)
-        .select(col("doc_id")).orderBy(col("doc_id"))
-    }, {
-      import graft.index.BoolSearch._
-      val q = Or(Seq(Term("slow scan"), Term("fast scan")))
-      s"SELECT doc_id FROM documents WHERE ${oraclePredicate("text", q)} ORDER BY doc_id"
-    }),
+    "substring_search_bool_or" -> boolQ("\"slow scan\" OR \"fast scan\""),
 
     // x AND NOT y: the negation cannot prune, the conjunction still
     // scans only x's candidate row groups
-    "substring_search_bool_not" -> Q((s, dir) => {
-      import graft.index.BoolSearch._
-      val p = fullIdx(s, dir)
-      val q = And(Seq(Term(QueryStr), Not(Term("vector"))))
-      graft.index.BoolSearch.search(s, p, Column, q)
-        .select(col("doc_id")).orderBy(col("doc_id"))
-    }, {
-      import graft.index.BoolSearch._
-      val q = And(Seq(Term(QueryStr), Not(Term("vector"))))
-      s"SELECT doc_id FROM documents WHERE ${oraclePredicate("text", q)} ORDER BY doc_id"
-    }),
+    "substring_search_bool_not" -> boolQ(s"\"$QueryStr\" AND NOT vector"),
 
     // nested tree: (a OR b) AND NOT c — candidates = union of the OR
     // arms, still bounded
-    "substring_search_bool_nested" -> Q((s, dir) => {
-      import graft.index.BoolSearch._
-      val p = fullIdx(s, dir)
-      val q = And(Seq(Or(Seq(Term("slow scan"), Term("fast scan"))),
-        Not(Term("window"))))
-      graft.index.BoolSearch.search(s, p, Column, q)
-        .select(col("doc_id")).orderBy(col("doc_id"))
-    }, {
-      import graft.index.BoolSearch._
-      val q = And(Seq(Or(Seq(Term("slow scan"), Term("fast scan"))),
-        Not(Term("window"))))
-      s"SELECT doc_id FROM documents WHERE ${oraclePredicate("text", q)} ORDER BY doc_id"
-    }),
+    "substring_search_bool_nested" ->
+      boolQ("(\"slow scan\" OR \"fast scan\") AND NOT window"),
 
     // result snippets: the search-engine highlight surface — a fixed
     // context window around the FIRST match, computed map-only on the

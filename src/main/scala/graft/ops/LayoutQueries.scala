@@ -29,7 +29,7 @@ object LayoutQueries {
       val files = Lake.ensureSplit(s, dir, "orders", "o_orderkey", 4)
       val p = IndexStore.indexPath(dir, "zonemap_orders_orderkey")
       IndexStore.ensure(p) { ZoneMapIndex.build(s, files, "o_orderkey", p) }
-      ZoneMapIndex.searchRange(s, p, "o_orderkey", 1000L, 1200L)
+      graft.api.ZoneMapKind.searchIndex(s, p, "o_orderkey", "1000..1200")
         .select(col("o_orderkey"), col("o_custkey"))
         .orderBy(col("o_orderkey"))
     },
@@ -177,7 +177,7 @@ object LayoutQueries {
       IndexStore.ensure(p) {
         graft.index.BloomIndex.build(s, Lake.listFiles(lake), "doc_id", p)
       }
-      graft.index.BloomIndex.search(s, p, "doc_id", "17")
+      graft.api.BloomKind.searchIndex(s, p, "doc_id", "17")
         .select(col("doc_id"), col("source")).orderBy(col("doc_id"))
     },
       "SELECT doc_id, source FROM documents WHERE doc_id = 17 ORDER BY doc_id"),

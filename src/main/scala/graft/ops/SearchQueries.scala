@@ -785,7 +785,7 @@ object SearchQueries {
       val files = Lake.ensureSplit(s, dir, "documents", "doc_id", 4)
       val p = IndexStore.indexPath(dir, "token_documents_text")
       IndexStore.ensure(p) { TokenIndex.build(s, files, "text", p) }
-      TokenIndex.search(s, p, "text", "merge merge")
+      graft.api.TokenKind.searchIndex(s, p, "text", "merge merge")
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, tokenOracle("merge merge")),
 
@@ -801,7 +801,7 @@ object SearchQueries {
         TokenIndex.build(s, files.drop(2), "text", b)
         TokenIndex.merge(s, a, b, m)
       }
-      TokenIndex.search(s, m, "text", "merge merge")
+      graft.api.TokenKind.searchIndex(s, m, "text", "merge merge")
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, tokenOracle("merge merge")),
 
@@ -858,7 +858,7 @@ object SearchQueries {
       val files = Lake.ensureSplit(s, dir, "documents", "doc_id", 4)
       val p = IndexStore.indexPath(dir, "token_documents_text")
       IndexStore.ensure(p) { TokenIndex.build(s, files, "text", p) }
-      TokenIndex.search(s, p, "text", "vector")
+      graft.api.TokenKind.searchIndex(s, p, "text", "vector")
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, tokenOracle("vector")),
 
@@ -957,7 +957,7 @@ object SearchQueries {
 
     "key_prefix_search" -> Q((s, dir) => {
       val p = keyIdx(s, dir)
-      KeyIndex.searchPrefix(s, p, "c_name", "Customer#00000001")
+      graft.api.KeyKind.searchIndex(s, p, "c_name", "Customer#00000001%")
         .select(col("c_custkey"), col("c_name"))
         .orderBy(col("c_custkey"))
     }, "SELECT c_custkey, c_name FROM customer WHERE c_name LIKE 'Customer#00000001%' ORDER BY c_custkey"),
@@ -988,7 +988,7 @@ object SearchQueries {
         KeyIndex.build(s, files.drop(2), "c_name", b)
         KeyIndex.merge(s, a, b, m)
       }
-      KeyIndex.searchPrefix(s, m, "c_name", "Customer#00000001")
+      graft.api.KeyKind.searchIndex(s, m, "c_name", "Customer#00000001%")
         .select(col("c_custkey"), col("c_name"))
         .orderBy(col("c_custkey"))
     }, "SELECT c_custkey, c_name FROM customer WHERE c_name LIKE 'Customer#00000001%' ORDER BY c_custkey")

@@ -1061,10 +1061,9 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
       case org.apache.spark.sql.catalyst.expressions.RLike(
           Lower(a: AttributeReference), Literal(p, StringType))
           if p != null => (a.name, p.toString)
-    }.flatMap { case (c, p) =>
-      val lits = graft.text.QueryShaping.requiredLiterals(p)
-        .map(graft.text.Text.sparkLower).filter(_.nonEmpty)
-      if (lits.isEmpty) None else Some((c, p, lits))
+    }.filter { case (_, p) =>
+      graft.text.QueryShaping.requiredLiterals(p)
+        .exists(graft.text.Text.sparkLower(_).nonEmpty)
     }
     // exact/IN-list string predicates → key index (case-exact, like
     // the predicate itself; keys are stored raw at build)
@@ -1139,10 +1138,11 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
         else Some(armKeeps.flatten.reduce(_ | _))
     }.flatten
       contains.flatMap { case (c, q) =>
-        keepFor(c, "ngram", psig("has", Seq(q)), probe(_, q)) } ++
-      regexes.flatMap { case (c, p, lits) =>
+        keepFor(c, "ngram", psig("has", Seq(q)),
+          ps => unitFiles(ps, graft.api.NgramKind.units(spark, ps, q))) } ++
+      regexes.flatMap { case (c, p) =>
         keepFor(c, "ngram", psig("re", Seq(p)),
-          probeGrams(_, litGrams(lits))) } ++
+          ps => unitFiles(ps, graft.api.NgramRegexKind.units(spark, ps, p))) } ++
       keyEqs.flatMap { case (c, ks) =>
         keepFor(c, "key", psig("eq", ks), keyProbe(_, ks)) } ++
       keyPrefixes.flatMap { case (c, p) =>
@@ -1406,6 +1406,18 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
         .map(r => Layout.canonPath(r._2))
     }.toSet
 
+  /** [[filesOf]] for a kind's candidate units; every covered file when
+    * the index cannot bound the predicate (None).
+    */
+  private def unitFiles(paths: Seq[String],
+      cands: Option[Set[(Int, Long)]]): Set[String] =
+    cands.fold(coveredFiles(paths))(filesOf(paths, _))
+
+  /** Every file the covering indexes `paths` cover. */
+  private def coveredFiles(paths: Seq[String]): Set[String] =
+    paths.flatMap(p => graft.api.IndexKind.metaRows(spark, p)
+      .map(r => Layout.canonPath(r._2))).toSet
+
   /** Files whose sorted key table contains any of `keys` (pushed
     * equality filter → row-group pruning inside the key table itself).
     */
@@ -1526,9 +1538,7 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
            org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.DateType => true
       case _ => false
     }
-    if (!comparable)
-      paths.flatMap(p => graft.api.IndexKind.metaRows(spark, p)
-        .map(r => Layout.canonPath(r._2))).toSet
+    if (!comparable) coveredFiles(paths)
     else {
       val dt = zones.schema("lo").dataType
       val loE = graft.index.ZoneMapIndex.boundExpr(dt, lo)
@@ -1538,39 +1548,6 @@ class IndexPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
         zones.filter(col("hi") >= loE && col("lo") <= hiE))) // overlap test
     }
   }
-
-  /** Files of the covering indexes whose gram postings intersect every
-    * query gram (driver-side candidate resolution via the cached metas;
-    * one small Spark job per covering index set).
-    */
-  private def probe(paths: Seq[String], query: String): Set[String] = {
-    val q = graft.text.Text.sparkLower(query)
-    // code-point gram windows, matching the Spark-side build
-    val qgrams = {
-      val cpg = graft.text.Text.cpGrams(q, NgramIndex.N)
-      if (cpg.nonEmpty) graft.text.QueryShaping.viableGrams(cpg.distinct)
-      else Seq(q)
-    }
-    probeGrams(paths, qgrams)
-  }
-
-  /** Grams of a set of required literals (each literal's code-point
-    * windows; literals below the gram width probe their exact short
-    * gram), capped by the query-shaping limit.
-    */
-  private def litGrams(lits: Seq[String]): Seq[String] =
-    graft.text.QueryShaping.viableGrams(lits.flatMap { l =>
-      val cpg = graft.text.Text.cpGrams(l, NgramIndex.N)
-      if (cpg.nonEmpty) cpg else Seq(l)
-    }.distinct)
-
-  /** Files of the covering indexes whose gram postings contain EVERY
-    * gram in `qgrams` (shared by the contains and rlike probes).
-    */
-  private def probeGrams(paths: Seq[String],
-      qgrams: Seq[String]): Set[String] =
-    // ONE tagged scan + intersection across all covering indexes
-    filesOf(paths, graft.api.IndexKind.postingUnits(spark, paths, qgrams))
 }
 
 object IndexPruneRule {
@@ -1594,46 +1571,37 @@ object IndexPruneRule {
       fi: org.apache.spark.sql.execution.datasources.FileIndex): Boolean =
     prunedLocations.synchronized { prunedLocations.contains(fi) }
 
-  // short-TTL bounded memo for probe keep sets: the same (indexes,
-  // predicate) probe repeats across fixpoint iterations and across
-  // actions on a reused DataFrame within one interactive burst. The
-  // TTL (not an mtime protocol) bounds staleness if an index dir is
-  // ever deleted and rebuilt in place between bursts.
+  // short-TTL bounded memos, each LRU-capped. The TTL (not an mtime
+  // protocol) bounds staleness if an index dir is ever deleted and
+  // rebuilt in place between bursts. A memoized None ("did not
+  // qualify") is cached like any value, so a non-qualifying probe costs
+  // its Spark job at most once per TTL window.
   private val ProbeMemoTtlMs = 60000L
-  private val probeMemo =
-    new java.util.LinkedHashMap[String, (Long, Set[String])](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Set[String])]): Boolean =
-        size > 256
-    }
 
-  // memo for the join-DFP small-side key evaluation: keyed by the
-  // CANONICALIZED key plan object (structural equality — collision-free
-  // by construction), same TTL discipline as the probe memo. The value
-  // None ("side did not qualify / overflowed the cap") is cached too,
-  // so a non-qualifying dim side costs its Spark job at most once per
-  // TTL window.
-  private val keysMemo = new java.util.LinkedHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      (Long, Option[Seq[String]])](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-          (Long, Option[Seq[String]])]): Boolean = size > 64
+  private[plans] final class TtlMemo[K, V](max: Int) {
+    private val m = new graft.core.LruMap[K, (Long, V)](max)
+    def apply(key: K)(f: => V): V = {
+      val now = System.currentTimeMillis()
+      m.get(key) match {
+        case Some((t, v)) if now - t < ProbeMemoTtlMs => v
+        case _ =>
+          val v = f
+          m.put(key, (now, v))
+          v
+      }
+    }
   }
 
-  private[plans] def memoKeys(
-      key: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
-      f: => Option[Seq[String]]): Option[Seq[String]] = {
-    val now = System.currentTimeMillis()
-    keysMemo.synchronized {
-      val hit = keysMemo.get(key)
-      if (hit != null && now - hit._1 < ProbeMemoTtlMs) return hit._2
-    }
-    val v = f
-    keysMemo.synchronized { keysMemo.put(key, (now, v)) }
-    v
-  }
+  // probe keep sets: the same (indexes, predicate) probe repeats across
+  // fixpoint iterations and across actions on a reused DataFrame
+  // within one interactive burst
+  private[plans] val memoProbe = new TtlMemo[String, Set[String]](256)
+
+  // join-DFP small-side key evaluation, keyed by the CANONICALIZED key
+  // plan object (structural equality — collision-free by construction)
+  private[plans] val memoKeys = new TtlMemo[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+    Option[Seq[String]]](64)
 
   /** Column stats derived from a zone-map index: min/max (Long for
     * integral zones, String for string zones), count(*) from meta
@@ -1643,26 +1611,9 @@ object IndexPruneRule {
   private[plans] case class ZStats(lo: Option[Any], hi: Option[Any],
       n: Long, nn: Option[Long], s: Option[BigDecimal])
 
-  // memo for the zone-stats aggregate probe (same TTL discipline);
-  // None ("not fully covered / unsupported zone type") is cached too
-  private val statsMemo = new java.util.LinkedHashMap[
-      String, (Long, Option[ZStats])](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, (Long, Option[ZStats])]): Boolean =
-      size > 64
-  }
-
-  private[plans] def memoStats(key: String)(
-      f: => Option[ZStats]): Option[ZStats] = {
-    val now = System.currentTimeMillis()
-    statsMemo.synchronized {
-      val hit = statsMemo.get(key)
-      if (hit != null && now - hit._1 < ProbeMemoTtlMs) return hit._2
-    }
-    val v = f
-    statsMemo.synchronized { statsMemo.put(key, (now, v)) }
-    v
-  }
+  // zone-stats aggregate probe; None = not fully covered / unsupported
+  // zone type
+  private[plans] val memoStats = new TtlMemo[String, Option[ZStats]](64)
 
   /** Combined per-measure stats of one group: count(measure),
     * sum(measure) as exact decimal (None = all-NULL measure group),
@@ -1684,37 +1635,9 @@ object IndexPruneRule {
     */
   private[plans] val MaxGroups = 100000
 
-  // memo for the grouped-aggregate probe (same TTL discipline);
-  // None ("not covered / over budget / wrong measure") is cached too
-  private val groupsMemo = new java.util.LinkedHashMap[
-      String, (Long, Option[Seq[GRow]])](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, (Long, Option[Seq[GRow]])]): Boolean =
-      size > 64
-  }
-
-  private[plans] def memoGroups(key: String)(
-      f: => Option[Seq[GRow]]): Option[Seq[GRow]] = {
-    val now = System.currentTimeMillis()
-    groupsMemo.synchronized {
-      val hit = groupsMemo.get(key)
-      if (hit != null && now - hit._1 < ProbeMemoTtlMs) return hit._2
-    }
-    val v = f
-    groupsMemo.synchronized { groupsMemo.put(key, (now, v)) }
-    v
-  }
-
-  private[plans] def memoProbe(key: String)(f: => Set[String]): Set[String] = {
-    val now = System.currentTimeMillis()
-    probeMemo.synchronized {
-      val hit = probeMemo.get(key)
-      if (hit != null && now - hit._1 < ProbeMemoTtlMs) return hit._2
-    }
-    val v = f
-    probeMemo.synchronized { probeMemo.put(key, (now, v)) }
-    v
-  }
+  // grouped-aggregate probe; None = not covered / over budget / wrong
+  // measure
+  private[plans] val memoGroups = new TtlMemo[String, Option[Seq[GRow]]](64)
 
   /** Attach the rule to an existing session (idempotent). */
   def enable(spark: SparkSession): Unit = {

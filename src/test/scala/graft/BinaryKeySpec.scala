@@ -45,11 +45,11 @@ class BinaryKeySpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(lower == Set(7L))
     // prefix "key-01" → ids 10..19; hex prefixes may be ODD length too
-    val pre = KeyIndex.searchPrefix(spark, idx, "bkey", hexOf("key-01"))
+    val pre = KeyKind.searchIndex(spark, idx, "bkey", hexOf("key-01") + "%")
       .select("id").collect().map(_.getLong(0)).toSet
     assert(pre == (10L to 19L).toSet)
     val odd = hexOf("key-01").dropRight(1)
-    val preOdd = KeyIndex.searchPrefix(spark, idx, "bkey", odd)
+    val preOdd = KeyKind.searchIndex(spark, idx, "bkey", odd + "%")
       .select("id").collect().map(_.getLong(0)).toSet
     assert(pre.subsetOf(preOdd))
   }
@@ -70,11 +70,11 @@ class BinaryKeySpec extends AnyFunSuite {
     val idx = TestSpark.tmpDir("binbloom-idx")
     BloomIndex.build(spark, graft.core.Lake.listFiles(lakeDir), "bkey", idx)
     assert(BloomIndex.isHexForm(spark.read.parquet(s"$idx/blooms")))
-    val hit = BloomIndex.search(spark, idx, "bkey", hexOf("key-023"))
+    val hit = BloomKind.searchIndex(spark, idx, "bkey", hexOf("key-023"))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(hit == Set(23L))
     // absent key: bloom may produce candidate units, refine kills them
-    assert(BloomIndex.search(spark, idx, "bkey", hexOf("absent"))
+    assert(BloomKind.searchIndex(spark, idx, "bkey", hexOf("absent"))
       .count() == 0L)
   }
 

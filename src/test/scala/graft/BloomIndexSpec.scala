@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.BloomKind
 import graft.index.BloomIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,7 +36,7 @@ class BloomIndexSpec extends AnyFunSuite {
     val totalUids = s.read.parquet(s"$idx/meta").count()
     assert(totalUids >= 4)
     for (id <- Seq(0L, 17L, 999L, 1999L)) {
-      val got = BloomIndex.search(s, idx, "id", id.toString)
+      val got = BloomKind.searchIndex(s, idx, "id", id.toString)
         .select("payload").as[String].collect().sorted.toSeq
       assert(got == brute(id), s"id=$id")
       val cands = BloomIndex.candidateUids(s, idx, id.toString)
@@ -45,7 +46,7 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("absent keys: empty result; fp rate near the design point") {
-    assert(BloomIndex.search(s, idx, "id", "123456").count() == 0)
+    assert(BloomKind.searchIndex(s, idx, "id", "123456").count() == 0)
     // 2000 rows over >=4 groups, m/n=16, k=7 => per-group fp ~ 7e-4;
     // across 400 probes x groups expect a handful of false candidates
     val totalUids = s.read.parquet(s"$idx/meta").count()
@@ -57,7 +58,7 @@ class BloomIndexSpec extends AnyFunSuite {
   }
 
   test("the search scan reads ONLY files holding candidate groups") {
-    val scanned = BloomIndex.search(s, idx, "id", "17")
+    val scanned = BloomKind.searchIndex(s, idx, "id", "17")
       .queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.LogicalRelation
             if r.relation.asInstanceOf[
@@ -106,7 +107,7 @@ class BloomIndexSpec extends AnyFunSuite {
     BloomIndex.build(s, lakeFiles.drop(2), "id", b)
     BloomIndex.merge(s, a, b, m)
     for (id <- Seq(5L, 1234L)) {
-      val got = BloomIndex.search(s, m, "id", id.toString)
+      val got = BloomKind.searchIndex(s, m, "id", id.toString)
         .select("payload").as[String].collect().sorted.toSeq
       assert(got == brute(id), s"merged id=$id")
     }

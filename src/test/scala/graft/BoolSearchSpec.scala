@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.BoolNgramKind
 import graft.index.{BoolSearch, NgramIndex}
 import graft.index.BoolSearch._
 import org.apache.spark.sql.functions._
@@ -35,21 +36,22 @@ class BoolSearchSpec extends AnyFunSuite {
 
   test("boolean trees equal the brute predicate") {
     val idx = mkIdx()
-    val queries = Seq[Bq](
-      Term("quick"),
-      And(Seq(Term("quick"), Term("five"))),
-      Or(Seq(Term("brown"), Term("five"))),
-      And(Seq(Term("five"), Not(Term("box")))),
-      And(Seq(Or(Seq(Term("quick"), Term("brown"))), Not(Term("fox")))),
-      Or(Seq(And(Seq(Term("quick"), Term("fox"))), Term("wizards"))),
-      Not(Term("the")), // pure negation: no bound, covered scan
-      And(Seq(Term("zzz"), Term("quick"))), // empty candidate set
-      Or(Seq(Term("zzz"), Not(Term("zzz")))) // unbounded OR arm
+    val queries = Seq(
+      "quick",
+      "quick AND five",
+      "brown OR five",
+      "five AND NOT box",
+      "(quick OR brown) AND NOT fox",
+      "quick fox OR wizards",
+      "NOT the", // pure negation: no bound, covered scan
+      "zzz AND quick", // empty candidate set
+      "zzz OR NOT zzz" // unbounded OR arm
     )
     for (q <- queries) {
-      val got = BoolSearch.search(spark, idx, "text", q)
+      val got = BoolNgramKind.searchIndex(spark, idx, "text", q)
         .select("doc_id").collect().map(_.getLong(0)).toSet
-      val want = corpus.filter(c => evalBq(c._2, q)).map(_._1).toSet
+      val tree = graft.text.BoolQueryParser.parse(q)
+      val want = corpus.filter(c => evalBq(c._2, tree)).map(_._1).toSet
       assert(got == want, s"query $q")
     }
   }
@@ -58,12 +60,11 @@ class BoolSearchSpec extends AnyFunSuite {
     // structural check on the set algebra: (a AND b) OR (a AND c)
     // must equal a AND (b OR c) results-wise
     val idx = mkIdx()
-    val q1 = Or(Seq(And(Seq(Term("quick"), Term("fox"))),
-      And(Seq(Term("quick"), Term("five")))))
-    val q2 = And(Seq(Term("quick"), Or(Seq(Term("fox"), Term("five")))))
-    val r1 = BoolSearch.search(spark, idx, "text", q1)
+    val q1 = "quick AND fox OR quick AND five"
+    val q2 = "quick AND (fox OR five)"
+    val r1 = BoolNgramKind.searchIndex(spark, idx, "text", q1)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val r2 = BoolSearch.search(spark, idx, "text", q2)
+    val r2 = BoolNgramKind.searchIndex(spark, idx, "text", q2)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(r1 == r2 && r1.nonEmpty)
   }

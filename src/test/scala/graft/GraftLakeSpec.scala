@@ -198,6 +198,14 @@ class GraftLakeSpec extends AnyFunSuite {
     }
     assert(ids(TokenKind, "!!!") == Seq(1L, 3L))
     assert(ids(graft.api.TokenFmKind, "!!!") == Seq(1L, 3L))
+    // ...and so do the single-index searches of the row-group kinds
+    for ((k, q) <- Seq[(graft.api.RowGroupKind, String)](NgramKind -> "",
+        TokenKind -> "", TokenKind -> "!!!")) {
+      val Seq(path) = lake.coverageByName(k.name, "text").map(_._1)
+      assert(k.searchIndex(spark, path, "text", q).select("doc_id")
+        .collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 3L),
+        s"single-index ${k.name} '$q'")
+    }
   }
 
   test("search demotes an index dir broken out of band and self-heals") {

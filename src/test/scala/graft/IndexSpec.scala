@@ -26,7 +26,7 @@ class IndexSpec extends AnyFunSuite {
     val exact = KeyIndex.searchExact(spark, idx, "key", "key-00042")
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(exact == Seq(42L))
-    val pre = KeyIndex.searchPrefix(spark, idx, "key", "key-0004")
+    val pre = graft.api.KeyKind.searchIndex(spark, idx, "key", "key-0004%")
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(pre == (40L to 49L))
     assert(KeyIndex.searchExact(spark, idx, "key", "nope").count() == 0)
@@ -40,7 +40,7 @@ class IndexSpec extends AnyFunSuite {
     KeyIndex.build(spark, fa, "key", a)
     KeyIndex.build(spark, fb, "key", b)
     KeyIndex.merge(spark, a, b, m)
-    val got = KeyIndex.searchPrefix(spark, m, "key", "key-0006")
+    val got = graft.api.KeyKind.searchIndex(spark, m, "key", "key-0006%")
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (60L to 69L))
   }
@@ -50,7 +50,7 @@ class IndexSpec extends AnyFunSuite {
     val files = mkLake(rows, "k", 4)
     val idx = TestSpark.tmpDir("zidx")
     ZoneMapIndex.build(spark, files, "k", idx)
-    val got = ZoneMapIndex.searchRange(spark, idx, "k", 123L, 131L)
+    val got = graft.api.ZoneMapKind.searchIndex(spark, idx, "k", "123..131")
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (123L to 131L))
     // pruning actually happened: hit row groups < total row groups
@@ -144,7 +144,7 @@ class IndexSpec extends AnyFunSuite {
     // fewer than ShingleK tokens -> no band keys: the standalone API
     // must answer empty with the normal result schema (lake + jac),
     // matching the facade guard, instead of empty.reduceLeft crashing
-    val res = graft.index.MinHashIndex.search(spark, path, "text", "too short")
+    val res = graft.api.MinHashKind.searchIndex(spark, path, "text", "too short")
     assert(res.count() == 0)
     assert(res.columns.contains("jac") && res.columns.contains("doc_id"))
   }
@@ -158,7 +158,7 @@ class IndexSpec extends AnyFunSuite {
     // "!!!" has no [a-z0-9] tokens = the empty token sequence, which is
     // a sub-sequence of EVERY row (the BwtDriver convention) -- the
     // previous two-space refine returned only token-less rows (none)
-    val got = graft.index.TokenIndex.search(spark, path, "text", "!!!")
+    val got = graft.api.TokenKind.searchIndex(spark, path, "text", "!!!")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L))
   }

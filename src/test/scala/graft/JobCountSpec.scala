@@ -204,7 +204,7 @@ class JobCountSpec extends AnyFunSuite {
       .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
       .write.mode("overwrite").parquet(s"$dir/t")
     val lake = GraftLake(spark, s"$dir/t")
-    val cases: Seq[(IndexKind, String, String, Set[Long])] = Seq(
+    val cases: Seq[(RowGroupKind, String, String, Set[Long])] = Seq(
       (NgramKind, "text", "needle thread", Set(1L, 2L, 3L)),
       (NgramRegexKind, "text", "needle th[a-z]+", Set(1L, 2L, 3L)),
       (BoolNgramKind, "text", "needle AND NOT filler", Set(1L, 2L, 3L)),
@@ -218,28 +218,45 @@ class JobCountSpec extends AnyFunSuite {
     for ((kind, column) <- cases.map(c => (c._1.name, c._2)).distinct)
       assert(lake.index(cases.find(_._1.name == kind).get._1, column,
         binpackRows = 1).size == 4)
+    // the lake file holding the needle rows
+    val needleFile = spark.read.parquet(s"$dir/t")
+      .filter(org.apache.spark.sql.functions.col("doc_id") === 1L)
+      .select(org.apache.spark.sql.functions.input_file_name())
+      .head().getString(0).split('/').last
     for ((kind, column, query, want) <- cases) {
       val tag = s"probe-${kind.getClass.getSimpleName}"
       // plan construction runs the candidate probe and nothing else;
       // the action runs the selective fetch + refine
-      def run(pass: String): (Seq[(Int, Boolean)], Seq[(Int, Boolean)]) = {
+      def run(label: String)(search: => org.apache.spark.sql.DataFrame)
+          : (Seq[(Int, Boolean)], Seq[(Int, Boolean)]) = {
         var df: org.apache.spark.sql.DataFrame = null
-        val plan = jobShapes(s"$tag-plan-$pass") {
-          df = lake.search(kind, column, query, 1000, Seq("doc_id"))
-        }
+        val plan = jobShapes(s"$tag-plan-$label") { df = search }
         var ids = Set.empty[Long]
-        val exec = jobShapes(s"$tag-exec-$pass") {
+        val exec = jobShapes(s"$tag-exec-$label") {
           ids = df.select("doc_id").collect().map(_.getLong(0)).toSet
         }
-        assert(ids == want, s"$tag: wrong results")
+        assert(ids == want, s"$tag $label: wrong results")
         (plan, exec)
       }
-      run("cold") // fills the meta, footer-schema and head caches
-      val (plan, exec) = run("warm")
-      assert(plan == Seq((1, true)),
-        s"$tag: candidate probe ran as $plan, want ONE single-stage job")
-      assert((plan ++ exec).forall(_._2),
-        s"$tag: schema-inference job in ${plan ++ exec}")
+      def assertOneProbe(label: String)(search: => org.apache.spark.sql.DataFrame): Unit = {
+        run(s"$label-cold")(search) // fills the meta, footer-schema and head caches
+        val (plan, exec) = run(s"$label-warm")(search)
+        assert(plan == Seq((1, true)),
+          s"$tag $label: candidate probe ran as $plan, want ONE single-stage job")
+        assert((plan ++ exec).forall(_._2),
+          s"$tag $label: schema-inference job in ${plan ++ exec}")
+      }
+      assertOneProbe("facade") {
+        lake.search(kind, column, query, 1000, Seq("doc_id"))
+      }
+      // the single-index search of the group holding the needle rows
+      // runs the same lifecycle: one probe job, the same rows
+      val path = lake.coverageByName(kind.name, column).map(_._1).find(p =>
+        IndexKind.metaRows(spark, p).exists(_._2.split('/').last == needleFile))
+        .get
+      assertOneProbe("single-index") {
+        kind.searchIndex(spark, path, column, query)
+      }
     }
   }
 

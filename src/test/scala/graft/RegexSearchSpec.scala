@@ -152,7 +152,7 @@ class RegexSearchSpec extends AnyFunSuite {
         .filter(lower(col("text")).rlike(pat))
         .select("id").collect().map(_.getLong(0)).sorted.toSeq
     def viaIdx(pat: String): Seq[Long] =
-      NgramIndex.searchRegex(spark, idx, "text", pat)
+      graft.api.NgramRegexKind.searchIndex(spark, idx, "text", pat)
         .select("id").collect().map(_.getLong(0)).sorted.toSeq
     for (pat <- Seq("fast [a-z]+ table", "(slow|fast) scan",
         "slow|fast", "merge row", "zz[0-9]+")) {
